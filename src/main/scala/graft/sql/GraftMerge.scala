@@ -733,7 +733,7 @@ final case class GraftMergeExec(cmd: GraftMergeCommand) extends LeafExecNode {
     // mergeAdhoc: SQL merges are not stream batches — the commit must NOT
     // advance the replay fence, or a checkpointed stream resuming on the same
     // table would have its next batch silently fenced out as a replay.
-    val empty = emptyLike(spark, t)
+    val empty = graft.util.Frames.empty(spark, t.schema)
     val pkSel = t.pkCols.map(col)
     // Serializable isolation: a source that scans the target itself (DELETE
     // FROM / UPDATE lowering, self-referential MERGE sources) pins the file
@@ -767,9 +767,6 @@ final case class GraftMergeExec(cmd: GraftMergeCommand) extends LeafExecNode {
           expectedVersion = expected)
     }
   }
-
-  private def emptyLike(spark: SparkSession, t: TransactionalTable) =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)
 
   override protected def doExecute(): RDD[InternalRow] = {
     run
@@ -875,8 +872,7 @@ final case class GraftDeleteWhereExec(cmd: GraftDeleteWhereCommand) extends Leaf
     // delete path (snapshot-pinned source, per-op write mode).
     if (t.deletePartitions(cmd.values.toSet).isEmpty) {
       val src = org.apache.spark.sql.graftshim.GraftShims.ofRows(session, cmd.source)
-      val empty = session.createDataFrame(
-        session.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)
+      val empty = graft.util.Frames.empty(session, t.schema)
       t.mergeAdhoc(empty, src.select(t.pkCols.map(col): _*),
         t.rowLevelMode("delete"),
         expectedVersion = GraftWriteValidation.selfReadVersion(cmd.source, cmd.root))

@@ -411,7 +411,7 @@ object GraftViewStore {
 // analyzer's resolution fixed-point.
 // ---------------------------------------------------------------------------
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedIdentifier, UnresolvedNamespace, UnresolvedRelation, UnresolvedSubqueryColumnAliases, UnresolvedTableOrView, UnresolvedView}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
@@ -1194,6 +1194,18 @@ final case class GraftCreateMaterializedViewExec(cmd: GraftCreateMaterializedVie
  *     (`sum(x)+1`) are not delta-decomposable from stored finals and fall
  *     back.
  *
+ * Every merge leg computes its input ONCE, on a path chosen before any
+ * work from the interval's changelog row bound (manifest row counts). A
+ * single-source interval of at most `LocalRowsCap` rows (the PK-Bloom
+ * small-file bound, 8,192) — a streaming micro-batch — is collected in one
+ * action: its group count and NULL-key / negative-count guards run on the
+ * driver, a single-column-key storage read is pruned to the files and rows
+ * of its groups, and the merge gets a one-partition frame over it, so the
+ * refresh commits one small storage file without a checkpoint or a count
+ * pass. A larger interval, and every join/union-tier delta (no bound),
+ * keeps the distributed path: an eager local checkpoint plus one aggregate
+ * action for the guards.
+ *
  * Any miss (shape, deletes in the interval, expired baseline snapshot,
  * schema drift, PK≠group keys) falls back to the full atomic recompute.
  */
@@ -1457,7 +1469,10 @@ private[sql] object GraftMvRefresh {
           // data already there (fence ahead of recorded meta); heal meta only
           if (v1 == v0) Some(("incremental: +0 rows (fence-healed)", 0L, Map(root -> v1)))
           else {
-            val delta = t.changes(v0, v1) // throws if v0 expired → full refresh
+            // throws if v0 expired → full refresh; deltaRows bounds the
+            // changelog's rows, so every merge leg knows upfront whether its
+            // input fits the driver-local path
+            val (delta, deltaRows) = t.changesBounded(v0, v1)
             def applyDef(images: org.apache.spark.sql.DataFrame)
                 : org.apache.spark.sql.DataFrame = {
               val substituted = qualified.transformDownWithSubqueries {
@@ -1504,7 +1519,7 @@ private[sql] object GraftMvRefresh {
                   name => distinctPairFrames(spark, applyDef(t.scanAt(v0)),
                     groupCols, aggCols, auxKinds)(name),
                   Map(root -> v0), Map(root -> v1), v0, v1, writerId, root,
-                  Map(s"$writerId#$root" -> v1), "agg-distinct", auxKinds)
+                  Map(s"$writerId#$root" -> v1), "agg-distinct", auxKinds, deltaRows)
                 Some((label, nG, Map(r -> v)))
               }
             } else if (!hasDeletes) aggResolved match {
@@ -1514,7 +1529,7 @@ private[sql] object GraftMvRefresh {
                 Some((s"incremental: +$n rows", n, Map(root -> v1)))
               case Some((groupCols, aggCols)) =>
                 val (label, nG, v, r) = mergeAggDelta(spark, storage, out,
-                  groupCols, aggCols, v1, writerId, root)
+                  groupCols, aggCols, v1, writerId, root, rowBound = deltaRows)
                 Some((label, nG, Map(r -> v)))
             } else aggResolved match {
               // RETRACTION path (the full IVM algebra): SUM/COUNT subtract
@@ -1527,7 +1542,7 @@ private[sql] object GraftMvRefresh {
                 val delOut = applyDef(
                   delta.where(fcol("_change_type") === "delete").drop("_change_type"))
                 val (label, nG, v, r) = mergeAggDeltaRetract(spark, storage, out,
-                  delOut, groupCols, aggCols, v1, writerId, root)
+                  delOut, groupCols, aggCols, v1, writerId, root, rowBound = deltaRows)
                 Some((label, nG, Map(r -> v)))
               // KEYED ROW retraction (E177): an EXPLICIT 'pk' property is
               // the user's contract that the definition emits at most one
@@ -1539,7 +1554,7 @@ private[sql] object GraftMvRefresh {
                 val delOut = applyDef(
                   delta.where(fcol("_change_type") === "delete").drop("_change_type"))
                 val n = mergeRowDeltaRetract(spark, storage, out, delOut,
-                  v1, writerId)
+                  v1, writerId, rowBound = deltaRows)
                 Some((s"incremental-retract: $n rows net-merged", n, Map(root -> v1)))
               case _ => None
             }
@@ -1772,9 +1787,7 @@ private[sql] object GraftMvRefresh {
             val (_, _, t, v0, _) = src(i); t.scanAt(v0).limit(0)
           }
           def emptyAgg(): org.apache.spark.sql.DataFrame =
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(storage.schema.fields))
+            graft.util.Frames.empty(spark, storage.schema)
           def schemaOk(df: org.apache.spark.sql.DataFrame): Boolean =
             df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
               storage.schema.fields.map(f => (f.name, f.dataType)).toSeq
@@ -2007,27 +2020,70 @@ private[sql] object GraftMvRefresh {
   }
 
   /** Combine per-group deltas into storage and MERGE on the group key —
-    * only groups present in the delta rewrite. */
+    * only groups present in the delta rewrite. The delta is computed ONCE
+    * ([[materialize]]). When `rowBound` (an upper bound on the delta's
+    * rows, e.g. the interval's changelog rows) is at most [[LocalRowsCap]]
+    * — every streaming micro-batch of a single-source view — the delta is
+    * collected in one action and checked on the driver; a one-column key
+    * reads its groups' stored rows in a second and pairs them on the
+    * driver, and the combined rows reach the merge as a one-partition
+    * driver-local frame (one storage file, no shuffle to dedupe its keys).
+    * Otherwise the delta keeps the distributed path: semi-join, left join,
+    * and the combined frame checkpointed once for the merge's passes. */
   private def mergeAggDelta(spark: SparkSession,
       storage: graft.table.TransactionalTable,
-      delta: org.apache.spark.sql.DataFrame,
+      delta0: org.apache.spark.sql.DataFrame,
       groupCols: Seq[String], aggCols: Seq[AggOut],
       v1: Long, writerId: String, root: String,
-      extraFences: Map[String, Long] = Map.empty): (String, Long, Long, String) = {
+      extraFences: Map[String, Long] = Map.empty,
+      rowBound: Long = Long.MaxValue): (String, Long, Long, String) = {
     import org.apache.spark.sql.functions.{greatest, least, when}
-    val d = delta.alias("d")
-    // Storage is the BIG side: restrict it to the delta's groups with a
-    // semi-join FIRST (AQE broadcasts the delta-key set in the common case →
-    // map-only storage scan, and the engine's runtime file pruning drops
-    // whole storage files from the broadcast PK set), then combine the two
-    // now-delta-sized frames. A direct d⟕storage left join would instead
-    // shuffle the whole MV on every refresh (left-outer cannot build on the
-    // big probe side).
-    val dKeys = delta.select(groupCols.map(fcol): _*).alias("k")
-    val semiCond = groupCols.map(c => fcol(s"s.$c") <=> fcol(s"k.$c")).reduce(_ && _)
-    val sSub = storage.scan().alias("s").join(dKeys, semiCond, "left_semi").alias("s")
-    // null-safe key equality: a NULL group key is a real group
-    val keyCond = groupCols.map(c => fcol(s"d.$c") <=> fcol(s"s.$c")).reduce(_ && _)
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val delta = materialize(spark, delta0, rowBound)
+    // the delta holds exactly the changed groups: its row count IS the group
+    // count, and the NULL-key guard (see the note below) checks here
+    val (nGroups, Seq(nullKeys)) = delta.counts(anyNull(groupCols))
+    if (nullKeys > 0) throw new IllegalStateException(
+      s"NULL group key in incremental delta ($nullKeys rows) — " +
+        "PK merge cannot apply it; falling back to full recompute")
+    // Each delta row PAIRED with its group's stored row (null when the group
+    // is new), addressable as d.<col> / s.<col>. Storage is the BIG side:
+    // it is restricted to the delta's groups FIRST — a direct d⟕storage
+    // left join would shuffle the whole MV on every refresh (left-outer
+    // cannot build on the big probe side).
+    val pairs = (delta.rows, groupCols) match {
+      // a local delta over a one-column key pairs on the driver: its
+      // groups' stored rows come back in one action — file-pruned on the
+      // driver (range ∧ Bloom) and filtered by the literal key set — and
+      // the pairs form a LocalRelation of (d, s) structs, so the combine
+      // below folds at planning. Keys are string/integral (the only PK
+      // types) of the same type on both sides, so driver equality is Spark's.
+      case (Some(rs), Seq(k)) =>
+        val dIdx = delta.df.schema.fieldIndex(k)
+        require(delta.df.schema(k).dataType == storage.schema(k).dataType,
+          s"group key $k: delta and storage types differ")
+        val values = rs.toSeq.map(_.get(dIdx))
+        val stored = storage.scanForKeys(graft.util.Frames.onePartition(spark,
+            values.map(Row(_)), StructType(Seq(delta.df.schema(k)))))
+          .where(fcol(k).isin(values: _*))
+        val sIdx = stored.schema.fieldIndex(k)
+        val byKey = graft.util.JobLabel.labeled(spark, "ivm-refresh:read-groups") {
+          stored.collect()
+        }.map(r => r.get(sIdx) -> r).toMap
+        graft.util.Frames.local(spark,
+          rs.toSeq.map(r => Row(r, byKey.getOrElse(r.get(dIdx), null))),
+          StructType(Seq(StructField("d", delta.df.schema),
+            StructField("s", stored.schema))))
+      // otherwise a semi-join (AQE broadcasts the delta-key set in the
+      // common case → map-only storage scan), then a left join on the
+      // null-safe key
+      case _ =>
+        val dKeys = delta.df.select(groupCols.map(fcol): _*).alias("k")
+        val semiCond = groupCols.map(c => fcol(s"s.$c") <=> fcol(s"k.$c")).reduce(_ && _)
+        val sSub = storage.scan().alias("s").join(dKeys, semiCond, "left_semi").alias("s")
+        val keyCond = groupCols.map(c => fcol(s"d.$c") <=> fcol(s"s.$c")).reduce(_ && _)
+        delta.df.alias("d").join(sSub, keyCond, "left")
+    }
     def addOf(c: String): org.apache.spark.sql.Column = {
       val dc = fcol(s"d.$c"); val sc = fcol(s"s.$c")
       when(sc.isNull, dc).when(dc.isNull, sc).otherwise(dc + sc)
@@ -2066,42 +2122,87 @@ private[sql] object GraftMvRefresh {
             case other => throw new IllegalStateException(s"unexpected agg kind $other")
           }).cast(tpe).as(c)
         }
-    val combined0 = d.join(sSub, keyCond, "left").select(combinedCols: _*)
+    val combined0 = pairs.select(combinedCols: _*)
     // E194: derived columns recompute per merged group from the
     // exactly-maintained companion outputs
     val combinedD = aggCols.filter(_.kind == "derived").foldLeft(combined0) {
       (df, a) => df.withColumn(a.name,
         derivedColumn(a, aggCols).cast(storage.schema(a.name).dataType))
     }
-    val combined = combinedD
+    val aligned = combinedD
       // align to the storage column ORDER (merge aligns by position for
       // the write path's schema checks)
       .select(storage.schema.fieldNames.map(fcol).toIndexedSeq: _*)
-      // materialized once (r19): the changelog scan + delta aggregation +
-      // storage join previously re-ran for every consumer — the null-key
-      // guard, the group count, and the merge's key-pruning and write
-      // passes (4× per refresh)
-      .localCheckpoint(true)
-    // group count + null-key guard in ONE action (see requireNonNullKeys:
-    // combined preserves exactly the delta's group keys, so checking here
-    // is equivalent and throws the same fallback-to-recompute signal)
-    val gc = combined.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"),
-      org.apache.spark.sql.functions.count(
-        when(groupCols.map(c => fcol(c).isNull).reduce(_ || _), 1)).as("nn"))
-      .head()
-    val nGroups = gc.getLong(0)
-    if (gc.getLong(1) > 0) throw new IllegalStateException(
-      s"NULL group key in incremental delta (${gc.getLong(1)} rows) — " +
-        "PK merge cannot apply it; falling back to full recompute")
-    val emptyDeletes = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    // computed once for the merge's key-pruning and write passes: a local
+    // delta's combination merges as ONE partition (paired on the driver it
+    // folds to local rows, no job); a distributed one is checkpointed
+    val combined =
+      if (delta.isLocal)
+        graft.util.Frames.onePartition(spark, aligned.collect().toSeq, aligned.schema)
+      else aligned.localCheckpoint(true)
+    val emptyDeletes = graft.util.Frames.empty(spark,
       org.apache.spark.sql.types.StructType(storage.pkCols.map(storage.schema(_))))
     storage.merge(combined, emptyDeletes, batchId = v1, writerId = Some(writerId),
       extraFences = extraFences)
     (s"incremental-agg: $nGroups groups merged", nGroups, v1, root)
   }
+
+  /** Rows a merge leg collects to the driver before it falls back to the
+    * distributed path: the PK-Bloom small-file bound, so a local delta also
+    * lands as one small, Bloom-indexed storage file. */
+  private val LocalRowsCap: Int = graft.table.TransactionalTable.BloomMaxRows.toInt
+
+  /** A merge leg's input, computed exactly once (see [[materialize]]):
+    * `rows` holds it on the driver when it was small enough, and `df` is
+    * then a one-partition frame over them. */
+  private final case class Materialized(df: DataFrame, rows: Option[Array[Row]]) {
+    def isLocal: Boolean = rows.isDefined
+
+    /** The row count and, per predicate, the rows it holds on — on the
+      * driver for a local input (a projection over a LocalRelation folds at
+      * planning: no Spark job), else in one aggregate action. */
+    def counts(preds: org.apache.spark.sql.Column*): (Long, Seq[Long]) = {
+      import org.apache.spark.sql.functions.{count, lit, when}
+      rows match {
+        case Some(rs) =>
+          val flags = if (preds.isEmpty) Array.empty[Row]
+            else graft.util.Frames.local(df.sparkSession, rs.toSeq, df.schema)
+              .select(preds.map(p => when(p, 1L).otherwise(0L)): _*).collect()
+          (rs.length.toLong, preds.indices.map(i => flags.map(_.getLong(i)).sum))
+        case None =>
+          val r = df.agg(count(lit(1)), preds.map(p => count(when(p, 1))): _*).head()
+          (r.getLong(0), preds.indices.map(i => r.getLong(i + 1)))
+      }
+    }
+  }
+
+  /** Computes a merge leg's input once. The path is chosen BEFORE any
+    * work, from `rowBound`, an upper bound on the input's rows known
+    * without a job (the interval's changelog rows from manifest row
+    * counts: an aggregate, join-free definition emits at most one row or
+    * group per input row). At most [[LocalRowsCap]]: the input comes back
+    * in ONE action and becomes a one-partition driver-local frame (the
+    * merge then writes one file and dedupes its keys without a shuffle,
+    * and [[Materialized.counts]] checks them without a job). Otherwise —
+    * and for the multi-source tiers, whose joins can multiply rows and so
+    * pass no bound — an eager local checkpoint, computed once as well.
+    * Should the bound not hold after all, the capped collect notices and
+    * checkpoints (the input is then computed twice, never held unbounded). */
+  private def materialize(spark: SparkSession, df: DataFrame, rowBound: Long): Materialized =
+    if (rowBound > LocalRowsCap) Materialized(df.localCheckpoint(true), None)
+    else {
+      val rows = graft.util.JobLabel.labeled(spark, "ivm-refresh:collect") {
+        df.limit(LocalRowsCap + 1).collect()
+      }
+      if (rows.length <= LocalRowsCap)
+        Materialized(graft.util.Frames.onePartition(spark, rows.toSeq, df.schema), Some(rows))
+      else Materialized(df.localCheckpoint(true), None)
+    }
+
+  /** Some group-key column is NULL (the incremental merge cannot apply it:
+    * see the note below [[mergeAggDelta]]). */
+  private def anyNull(groupCols: Seq[String]): org.apache.spark.sql.Column =
+    groupCols.map(c => fcol(c).isNull).reduce(_ || _)
 
   // A NULL group key cannot ride the incremental path: the storage MERGE
   // matches rows by PK, and NULL never equals NULL there — the delta would
@@ -2213,7 +2314,7 @@ private[sql] object GraftMvRefresh {
       baselines: Map[String, Long], targets: Map[String, Long],
       bootBatchId: Long, batchId: Long, writerId: String, root: String,
       extraFences: Map[String, Long], tier: String,
-      auxKinds: Set[String])
+      auxKinds: Set[String], rowBound: Long = Long.MaxValue)
       : (String, Long, Long, String) = {
     import org.apache.spark.sql.functions.{coalesce, count => fcount, lit, sum => fsum, when}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -2273,22 +2374,19 @@ private[sql] object GraftMvRefresh {
         val semi = keys.map(c => fcol(s"a.$c") <=> fcol(s"k.$c")).reduce(_ && _)
         val aSub = aux.scan().alias("a").join(nKeys, semi, "left_semi").alias("a")
         val cond = keys.map(c => fcol(s"n.$c") <=> fcol(s"a.$c")).reduce(_ && _)
-        val comb = n.join(aSub, cond, "left")
+        val comb = materialize(spark, n.join(aSub, cond, "left")
           .select((keys.map(c => fcol(s"n.$c").as(c)) :+
-            (coalesce(fcol("a.cnt"), lit(0L)) + fcol("n.__net")).as("cnt")): _*)
-          .localCheckpoint(true)
-        val combCnts = comb.agg(
-          fcount(when(fcol("cnt") < 0, 1)).as("neg"),
-          fcount(when(groupCols.map(c => fcol(c).isNull).reduce(_ || _), 1))
-            .as("nn")).head()
-        if (combCnts.getLong(1) > 0) throw new IllegalStateException(
-          s"NULL group key in incremental delta (${combCnts.getLong(1)} rows) — " +
+            (coalesce(fcol("a.cnt"), lit(0L)) + fcol("n.__net")).as("cnt")): _*),
+          // the bound covers the storage interval only, not an aux catch-up
+          if (v0aux == baselines) rowBound else Long.MaxValue)
+        val (_, Seq(nNeg, nullKeys)) = comb.counts(fcol("cnt") < 0, anyNull(groupCols))
+        if (nullKeys > 0) throw new IllegalStateException(
+          s"NULL group key in incremental delta ($nullKeys rows) — " +
             "PK merge cannot apply it; falling back to full recompute")
-        val nNeg = combCnts.getLong(0)
         if (nNeg > 0) throw new IllegalStateException(
           s"$nNeg negative distinct-value counts — baseline/interval mismatch")
-        aux.merge(comb.where(fcol("cnt") > 0),
-          comb.where(fcol("cnt") === 0).select(keys.map(fcol): _*),
+        aux.merge(comb.df.where(fcol("cnt") > 0),
+          comb.df.where(fcol("cnt") === 0).select(keys.map(fcol): _*),
           batchId = batchId, writerId = Some(writerId),
           extraFences = targets.map { case (r0, v) => s"$writerId#$r0" -> v })
       }
@@ -2321,7 +2419,7 @@ private[sql] object GraftMvRefresh {
     }
     val (_, nG, v, r) = mergeAggDeltaRetract(spark, storage, dIns, dDel,
       groupCols, aggCols, batchId, writerId, root, extraFences,
-      distinctCounts = overlays)
+      distinctCounts = overlays, rowBound = rowBound)
     (s"incremental-$tier: $nG groups merged", nG, v, r)
   }
 
@@ -2411,7 +2509,8 @@ private[sql] object GraftMvRefresh {
       extraFences: Map[String, Long] = Map.empty,
       /** E180: per count_distinct output, the post-merge aux counts
         * (groupCols…, __dc) to OVERLAY onto the combined frame. */
-      distinctCounts: Seq[(AggOut, org.apache.spark.sql.DataFrame)] = Nil)
+      distinctCounts: Seq[(AggOut, org.apache.spark.sql.DataFrame)] = Nil,
+      rowBound: Long = Long.MaxValue)
       : (String, Long, Long, String) = {
     import org.apache.spark.sql.functions.{coalesce, lit, when}
     // net delta: full outer ins/del per group (a group may appear on either
@@ -2500,26 +2599,20 @@ private[sql] object GraftMvRefresh {
       (df, a) => df.withColumn(a.name,
         derivedColumn(a, aggCols).cast(storage.schema(a.name).dataType))
     }
-    val combined = combinedY
-      .localCheckpoint(true) // one computation feeds the sanity check + both merge legs
-    // sanity + group count in ONE action over the checkpointed frame (r19 —
-    // previously two): a negative row count means the baseline diverged
+    // one computation feeds the sanity check + both merge legs
+    val combined = materialize(spark, combinedY, rowBound)
+    // sanity + group count: a negative row count means the baseline diverged
     // from the interval (should be impossible under the fence) — refuse
     // loudly rather than commit garbage
-    val cnts = combined.agg(
-      org.apache.spark.sql.functions.count(lit(1)).as("n"),
-      org.apache.spark.sql.functions.count(when(fcol(starName) < 0, 1)).as("neg"),
-      org.apache.spark.sql.functions.count(
-        when(groupCols.map(c => fcol(c).isNull).reduce(_ || _), 1)).as("nn"))
-      .head()
-    val (nGroups, nNeg) = (cnts.getLong(0), cnts.getLong(1))
-    if (cnts.getLong(2) > 0) throw new IllegalStateException(
-      s"NULL group key in incremental delta (${cnts.getLong(2)} rows) — " +
+    val (nGroups, Seq(nNeg, nullKeys)) =
+      combined.counts(fcol(starName) < 0, anyNull(groupCols))
+    if (nullKeys > 0) throw new IllegalStateException(
+      s"NULL group key in incremental delta ($nullKeys rows) — " +
         "PK merge cannot apply it; falling back to full recompute")
     if (nNeg > 0) throw new IllegalStateException(
       s"retraction produced $nNeg negative group counts — baseline/interval mismatch")
-    val upserts = combined.where(fcol(starName) > 0)
-    val dead = combined.where(fcol(starName) === 0)
+    val upserts = combined.df.where(fcol(starName) > 0)
+    val dead = combined.df.where(fcol(starName) === 0)
       .select(storage.pkCols.map(fcol): _*)
     storage.merge(upserts, dead, batchId = v1, writerId = Some(writerId),
       extraFences = extraFences)
@@ -2545,22 +2638,23 @@ private[sql] object GraftMvRefresh {
       insRows: org.apache.spark.sql.DataFrame,
       delRows: org.apache.spark.sql.DataFrame,
       v1: Long, writerId: String,
-      extraFences: Map[String, Long] = Map.empty): Long = {
+      extraFences: Map[String, Long] = Map.empty,
+      rowBound: Long = Long.MaxValue): Long = {
     import org.apache.spark.sql.functions.{lit, sum => fsum}
     val cols = storage.schema.fieldNames.toIndexedSeq
     val signed = insRows.select(cols.map(fcol): _*).withColumn("__sgn", lit(1L))
       .unionByName(delRows.select(cols.map(fcol): _*).withColumn("__sgn", lit(-1L)))
-    val net = signed.groupBy(cols.map(fcol): _*).agg(fsum(fcol("__sgn")).as("__net"))
-      .where(fcol("__net") =!= 0)
-      .localCheckpoint(true) // one computation of the terms feeds both merge legs
-    val upserts = net.where(fcol("__net") > 0).drop("__net")
+    // one computation of the terms feeds both merge legs
+    val net = materialize(spark, signed.groupBy(cols.map(fcol): _*)
+      .agg(fsum(fcol("__sgn")).as("__net")).where(fcol("__net") =!= 0), rowBound)
+    val upserts = net.df.where(fcol("__net") > 0).drop("__net")
     val upsertKeys = upserts.select(storage.pkCols.map(fcol): _*).alias("u")
     val deadCond = storage.pkCols
       .map(c => fcol(s"n.$c") <=> fcol(s"u.$c")).reduce(_ && _)
-    val dead = net.where(fcol("__net") < 0)
+    val dead = net.df.where(fcol("__net") < 0)
       .select(storage.pkCols.map(fcol): _*).alias("n")
       .join(upsertKeys, deadCond, "left_anti").distinct()
-    val n = net.count()
+    val (n, _) = net.counts()
     storage.merge(upserts, dead, batchId = v1, writerId = Some(writerId),
       extraFences = extraFences)
     n

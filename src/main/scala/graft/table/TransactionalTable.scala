@@ -498,18 +498,8 @@ final class TransactionalTable private (
   }
 
   private def scanFiles(files: Seq[DataFile], sch: StructType = schema): DataFrame =
-    if (files.isEmpty) emptyFrame(sch)
+    if (files.isEmpty) graft.util.Frames.empty(spark, sch)
     else readParquet(files.map(_.path), sch)
-
-  /** Optimizer-VISIBLE empty frame: a LocalRelation, not an emptyRDD-backed
-    * LogicalRDD. PropagateEmptyRelation / PruneFilters can fold unions,
-    * joins and filters over a LocalRelation-empty scan (an append-only
-    * changes() interval loses its EXCEPT-ALL subtree and a merge against an
-    * empty slice loses the whole merge join), where a LogicalRDD is opaque
-    * and every consumer keeps planning — and running — the full shape. */
-  private def emptyFrame(sch: StructType): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
 
   /** Rename-aware multi-file parquet read under `sch`: for every column with
     * tracked former names ([[renames]]), the files are read with the old
@@ -560,7 +550,7 @@ final class TransactionalTable private (
       sch: StructType = schema, withLineage: Boolean = false): DataFrame =
     if (deletes.isEmpty && !withLineage) scanFiles(files, sch)
     else if (files.isEmpty)
-      emptyFrame(
+      graft.util.Frames.empty(spark,
         if (withLineage) sch.add("_rid", "long").add("_lseq", "long") else sch)
     else {
       val (vecDel, rest) = deletes.partition(_.kind == DeleteFile.Vector)
@@ -731,6 +721,13 @@ final class TransactionalTable private (
    * downstream consumer pays for the churn, not the table.
    */
   def changes(fromVersion: Long, toVersion: Long): DataFrame =
+    changesInternal(fromVersion, toVersion, withLineage = false)._1
+
+  /** [[changes]] plus an upper bound on its row count, from manifest row
+    * counts alone (no Spark job): an insert image comes from an added or a
+    * delete-touched carried file, a delete image from a removed or a
+    * delete-touched carried file, and deletes only drop rows. */
+  def changesBounded(fromVersion: Long, toVersion: Long): (DataFrame, Long) =
     changesInternal(fromVersion, toVersion, withLineage = false)
 
   /** [[changes]] carrying ROW LINEAGE (Iceberg v3 changelog shape): every
@@ -743,13 +740,13 @@ final class TransactionalTable private (
   def changesWithLineage(fromVersion: Long, toVersion: Long): DataFrame = {
     require(rowLineageEnabled,
       s"row lineage is not enabled on $root (ALTER TABLE ... SET TBLPROPERTIES('row.lineage'='true'))")
-    changesInternal(fromVersion, toVersion, withLineage = true)
+    changesInternal(fromVersion, toVersion, withLineage = true)._1
       .withColumnRenamed("_rid", "_row_id")
       .withColumnRenamed("_lseq", "_last_updated_seq")
   }
 
   private def changesInternal(fromVersion: Long, toVersion: Long,
-      withLineage: Boolean): DataFrame = {
+      withLineage: Boolean): (DataFrame, Long) = {
     require(fromVersion <= toVersion,
       s"changes: fromVersion $fromVersion must be <= toVersion $toVersion")
     val fromSnap = snapshotAt(fromVersion)
@@ -778,8 +775,12 @@ final class TransactionalTable private (
     // nothing new.
     val oldDeleteIds = fromSnap.deletes.map(d => (d.path, d.target, d.offset)).toSet
     val newDeletes = toSnap.deletes.filterNot(d => oldDeleteIds((d.path, d.target, d.offset)))
-    val (newVec, restNew) = newDeletes.partition(_.kind == DeleteFile.Vector)
-    val (newPos, newEq) = restNew.partition(_.kind == DeleteFile.Position)
+    val newVec = newDeletes.filter(_.kind == DeleteFile.Vector)
+    val newPos = newDeletes.filter(_.kind == DeleteFile.Position)
+    val newEq = newDeletes.filter(_.kind == DeleteFile.Equality)
+    // A delete kind `touched` does not know can mask ANY carried file:
+    // every carried file then counts as touched (see the append-only guard)
+    val unknownDeletes = newDeletes.size != newVec.size + newPos.size + newEq.size
     // Positional deletes name their victim files outright — read the tiny
     // delete files once and prune carried files to exactly those targets
     // (their manifest pk range is the never-prunable full span, see
@@ -798,20 +799,29 @@ final class TransactionalTable private (
     // intervals fall back to the full carried walk, exactly the pre-rewrite
     // cost).
     def touched(f: DataFile): Boolean =
-      newEq.exists(d => d.pkMin <= f.pkMax && d.pkMax >= f.pkMin) ||
+      unknownDeletes ||
+        newEq.exists(d => d.pkMin <= f.pkMax && d.pkMax >= f.pkMin) ||
         posTargets.contains(stripScheme(f.path))
     val affectedCarried: Seq[DataFile] =
-      if (newEq.isEmpty && posTargets.isEmpty) Seq.empty
+      if (newEq.isEmpty && posTargets.isEmpty && !unknownDeletes) Seq.empty
       else toSnap.files match {
         case mf: ManifestFiles =>
           val keep: ChunkRef => Boolean =
-            if (posTargets.nonEmpty) _ => true
+            if (posTargets.nonEmpty || unknownDeletes) _ => true
             else c => newEq.exists(d => d.pkMin <= c.pkMax && d.pkMax >= c.pkMin)
           mf.loadWhere(keep).filter(f => !addedPaths.contains(f.path) && touched(f))
         case sq => sq.filter(f => !addedPaths.contains(f.path) && touched(f))
       }
     val after = scanWithDeletes(added ++ affectedCarried, toSnap.deletes, sch,
       withLineage = withLineage)
+    val rowBound = (added ++ removed).map(_.rows).sum + 2 * affectedCarried.map(_.rows).sum
+    // INVARIANT of the fast path below: `touched` over-approximates every
+    // carried file a new delete artifact can mask. It knows the equality
+    // (pk range), position (named target) and vector (manifest target)
+    // kinds; any other kind counts every carried file as touched, so an
+    // interval carrying one always runs the EXCEPT-ALL pair. A new delete
+    // kind must be wired into `touched` before it can ride the fast path,
+    // or this branch would silently drop its delete images.
     if (removed.isEmpty && affectedCarried.isEmpty) {
       // APPEND-ONLY interval, decided from manifest metadata alone: nothing
       // was removed and no new delete artifact touches a carried file, so
@@ -821,12 +831,13 @@ final class TransactionalTable private (
       // passes cheaper per consumer action, and a downstream delete probe
       // (`where(_change_type = 'delete')`) constant-folds to an empty
       // relation instead of launching a job (r20; guide §2.4).
-      after.withColumn("_change_type", lit("insert"))
+      (after.withColumn("_change_type", lit("insert")), rowBound)
     } else {
       val before = scanWithDeletes(removed ++ affectedCarried, fromSnap.deletes,
         sch, withLineage = withLineage)
-      after.exceptAll(before).withColumn("_change_type", lit("insert"))
-        .unionByName(before.exceptAll(after).withColumn("_change_type", lit("delete")))
+      (after.exceptAll(before).withColumn("_change_type", lit("insert"))
+        .unionByName(before.exceptAll(after).withColumn("_change_type", lit("delete"))),
+        rowBound)
     }
   }
 

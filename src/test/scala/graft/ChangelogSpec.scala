@@ -62,6 +62,19 @@ class ChangelogSpec extends SparkSpec {
     assert(diff(t, v2, v2) === Set.empty)
   }
 
+  test("changesBounded: the manifest row bound covers every changed row in each mode") {
+    for (mode <- Seq(MergeMode.CopyOnWrite, MergeMode.MergeOnRead,
+        MergeMode.MergeOnReadPositional)) {
+      val t = mk(s"chg-bound-$mode")
+      val (v1, v2) = applyScenario(t, mode)
+      // an append-only interval is bounded by exactly its added rows
+      assert(t.changesBounded(0, v1)._2 === 3, s"mode=$mode")
+      val (df, bound) = t.changesBounded(v1, v2)
+      assert(df.count() === expected.size, s"mode=$mode")
+      assert(bound >= expected.size, s"mode=$mode: bound $bound")
+    }
+  }
+
   test("changes across a pure compaction interval is empty") {
     val t = mk("chg-compact")
     val (_, v2) = applyScenario(t, MergeMode.MergeOnRead)

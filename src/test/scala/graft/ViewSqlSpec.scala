@@ -1312,6 +1312,115 @@ class ViewSqlSpec extends SparkSpec {
       .select("refreshed").as[Boolean].head() === false)
   }
 
+  /** Descriptions of the Spark jobs `body` starts (its own job group only). */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "")
+    try {
+      body
+      org.apache.spark.graftshim.ListenerDrain.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  /** The single-source aggregate definition the driver-local merge specs
+    * maintain: every append-only kind (SUM, COUNT, MIN, MAX, AVG with its
+    * companions, a derived ratio). */
+  private def fullAggSql(cat: String): String =
+    s"SELECT grp, SUM(v) AS sv, COUNT(v) AS nv, COUNT(*) AS n, MIN(v) AS mn, " +
+      s"MAX(v) AS mx, AVG(v) AS av, SUM(v) / CAST(COUNT(*) AS DOUBLE) AS ratio " +
+      s"FROM $cat.db.ev GROUP BY grp"
+
+  test("aggregate MV: small append-only deltas merge driver-locally into one storage file") {
+    val (cat, w) = freshGrouped() // ev: (1,'a',10),(2,'a',20),(3,'b',5)
+    spark.sql(s"CREATE MATERIALIZED VIEW $cat.db.lagg TBLPROPERTIES('pk'='grp') AS " +
+      fullAggSql(cat))
+    val cols = "grp, sv, nv, n, mn, mx, av, ratio"
+    // every round grows every existing group AND opens new ones (an
+    // all-NULL-input group included), so each merge rewrites the whole view
+    Seq(
+      "(4,'a',7), (5,'b',1), (6,'c',100), (7,'d',NULL)",
+      "(8,'a',-3), (9,'b',50), (10,'c',2), (11,'d',9), (12,'e',4)",
+      "(13,'a',1), (14,'b',2), (15,'c',3), (16,'d',NULL), (17,'e',5), (18,'f',6)"
+    ).zipWithIndex.foreach { case (values, i) =>
+      spark.sql(s"INSERT INTO $cat.db.ev VALUES $values")
+      val r = spark.sql(s"CALL $cat.system.refresh_mv('db.lagg')")
+        .select("reason").as[String].head()
+      assert(r.startsWith("incremental-agg:"), s"round $i: got $r")
+      val view = spark.sql(s"SELECT $cols FROM $cat.db.lagg ORDER BY grp").collect().toSeq
+      val full = spark.sql(s"SELECT $cols FROM (${fullAggSql(cat)}) ORDER BY grp")
+        .collect().toSeq
+      assert(view === full, s"round $i diverged from the full recompute")
+      assert(TransactionalTable.open(spark, s"$w/db/lagg/_storage").snapshot.files.size === 1,
+        s"round $i: a one-partition delta must write one storage file")
+    }
+  }
+
+  test("aggregate MV: a delta past the driver-local cap takes the distributed path") {
+    val (cat, _) = freshGrouped()
+    spark.sql(s"CREATE MATERIALIZED VIEW $cat.db.bigagg TBLPROPERTIES('pk'='grp') AS " +
+      fullAggSql(cat))
+    val cap = TransactionalTable.BloomMaxRows.toInt
+    // cap new groups plus existing group 'a': cap + 1 changed groups
+    spark.sql(s"INSERT INTO $cat.db.ev SELECT id + 100, CONCAT('g', id), id % 7 " +
+      s"FROM range($cap) UNION ALL SELECT 99, 'a', 1")
+    val cols = "grp, sv, nv, n, mn, mx, av, ratio"
+    // the path is chosen from the interval's manifest row bound before any
+    // work: past the cap the delta is never collected (computed once, by
+    // the checkpoint), under it always
+    def check(expectPrefix: String, groups: Int, local: Boolean): Unit = {
+      var r = ""
+      val jobs = jobsDuring {
+        r = spark.sql(s"CALL $cat.system.refresh_mv('db.bigagg')")
+          .select("reason").as[String].head()
+      }
+      assert(r.startsWith(expectPrefix), s"got $r")
+      assert(jobs.exists(_.startsWith("ivm-refresh:collect")) === local, jobs.mkString("\n"))
+      val view = spark.sql(s"SELECT $cols FROM $cat.db.bigagg ORDER BY grp").collect().toSeq
+      val full = spark.sql(s"SELECT $cols FROM (${fullAggSql(cat)}) ORDER BY grp")
+        .collect().toSeq
+      assert(view.size === groups && view === full)
+    }
+    check(s"incremental-agg: ${cap + 1} groups merged", cap + 2, local = false)
+    // the next small delta is back under the cap, over the now-large view
+    spark.sql(s"INSERT INTO $cat.db.ev VALUES (20000,'a',3), (20001,'g5',4), (20002,'new',5)")
+    check("incremental-agg: 3 groups merged", cap + 3, local = true)
+  }
+
+  test("aggregate MV: a small append-only refresh runs a bounded number of Spark jobs") {
+    val (cat, _) = freshGrouped()
+    spark.sql(s"CREATE MATERIALIZED VIEW $cat.db.jagg TBLPROPERTIES('pk'='grp') AS " +
+      s"SELECT grp, SUM(v) AS sv, COUNT(*) AS n FROM $cat.db.ev GROUP BY grp")
+    // a stream-sized batch over six groups, as a CDC trigger delivers it
+    def append(from: Int): Unit =
+      spark.sql(s"INSERT INTO $cat.db.ev SELECT id, CONCAT('e', id % 6), id % 100 " +
+        s"FROM range($from, ${from + 1000})")
+    append(100)
+    spark.sql(s"CALL $cat.system.refresh_mv('db.jagg')").collect()
+    append(1100)
+    var result = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsDuring {
+      result = spark.sql(s"CALL $cat.system.refresh_mv('db.jagg')").collect()
+    }
+    val reason = result.head.getAs[String]("reason")
+    assert(reason.startsWith("incremental-agg: 6 groups merged"), reason)
+    // delta collect (map stage + result), storage file pruning by the
+    // delta's keys, stored-groups read, merge key collect, key broadcast +
+    // write, PK-stats pass
+    assert(jobs.size <= 8, jobs.mkString("\n"))
+  }
+
   test("aggregate MV: delta merge is replay-fenced like the row-preserving path") {
     val (cat, w) = freshGrouped()
     spark.sql(s"CREATE MATERIALIZED VIEW $cat.db.fagg AS " +
