@@ -27,14 +27,23 @@ import scala.jdk.CollectionConverters._
  *  - [[read]] / [[exists]] / [[modifiedAtMs]] / [[delete]] — plain object
  *    operations every store has.
  *
+ * Bulk data and delete files do not go through this contract, and need no
+ * rename either: write tasks put every Parquet file straight at its final
+ * path inside a fresh per-attempt commit directory
+ * (`org.apache.spark.sql.graftshim.ManifestWrite` — no `_temporary`
+ * directory, no `_SUCCESS` file) and report it with its stats to the
+ * driver. The manifest claim above is the ONLY commit: until it lands, the
+ * written files are orphans no manifest references, swept by
+ * `removeOrphanFiles`. A delete-file directory, referenced as a whole, is
+ * swept of every file no committed task attempt reported before its claim.
+ *
  * Explicitly OUT of the contract (a documented requirement, not an
- * abstraction): bulk data-file writes (parquet via Spark's own
- * committers, which are object-store-aware upstream) and `ALTER TABLE
- * RENAME TO`'s whole-directory move — on an object store that move is a
- * copy+delete whose crash window materializes the dual-root state the
- * rename heal marker already REFUSES as ambiguous rather than guessing
- * (`TransactionalTable` heal path); a production object-store deployment
- * renames via catalog metadata, not directory moves.
+ * abstraction): `ALTER TABLE RENAME TO`'s whole-directory move — on an
+ * object store that move is a copy+delete whose crash window materializes
+ * the dual-root state the rename heal marker already REFUSES as ambiguous
+ * rather than guessing (`TransactionalTable` heal path); a production
+ * object-store deployment renames via catalog metadata, not directory
+ * moves.
  */
 trait CommitIO {
   /** Create `path` with `bytes` iff absent — the atomic claim. MUST throw

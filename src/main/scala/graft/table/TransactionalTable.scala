@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ManifestWrite
 import org.apache.spark.sql.types.StructType
 
 /** One immutable data file tracked by a snapshot manifest. `partition` is the
@@ -23,8 +24,9 @@ final case class DataFile(path: String, partition: Option[String], pkMin: Long, 
     /** Per-column [min,max] for the table's OTHER integral/timestamp columns
       * (lower-cased names; timestamps as epoch µs) — Iceberg column-stats
       * parity: SQL predicates on non-PK columns prune whole files at plan
-      * time (ManifestFileIndex). Extracted from the same footer read that
-      * yields the PK stats, so it costs nothing extra at commit. */
+      * time (ManifestFileIndex). Gathered by the task that writes the file,
+      * as the Parquet footer reports them (no entry when the footer has no
+      * numeric stats, e.g. INT96 timestamps), so it costs no read at commit. */
     stats: Map[String, (Long, Long)] = Map.empty,
     /** Partition-spec id this file was written under (partition evolution,
       * Iceberg spec-id parity): `partition` is the value of THAT spec's
@@ -241,8 +243,21 @@ final class TransactionalTable private (
     * hash-domain), a single 64-bit column for integral (unchanged layout). */
   private def pkDeleteCols: Seq[org.apache.spark.sql.Column] =
     if (pkHashed) pkCols.map(col) else Seq(col(pk).cast("long"))
-  private def pkDeleteKey: org.apache.spark.sql.Column =
-    if (pkHashed) col(pk) else col(pk).cast("long")
+
+  /** Delete files of one kind (equality or position), read under the schema
+    * [[writeDeleteFile]] wrote: the [[pkDeleteCols]] plus `_dseq`, or
+    * `_dfile` + `_dpos`. A given schema plans no schema-inference job. */
+  private def readDeletes(ds: Seq[DeleteFile]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    val written = ds.head.kind match {
+      case DeleteFile.Position =>
+        StructType(Seq(StructField("_dfile", StringType), StructField("_dpos", LongType)))
+      case _ =>
+        val keys = if (pkHashed) pkCols.map(schema(_)) else Seq(StructField(pk, LongType))
+        StructType(keys :+ StructField("_dseq", LongType))
+    }
+    spark.read.schema(written).parquet(ds.map(_.path): _*)
+  }
   /** Source column of the partition transform (the column users filter on). */
   def partitionCol: Option[String] = partitionSpec.map(_.col)
 
@@ -603,7 +618,7 @@ final class TransactionalTable private (
         // Positional masking: anti-join on (file, ordinal) via Spark's hidden
         // per-file metadata columns — no key comparison, no sequence logic.
         // (_gfile/_gpos fall away in the final schema projection.)
-        val pdRaw = spark.read.parquet(posDel.map(_.path): _*).select(col("_dfile"), col("_dpos"))
+        val pdRaw = readDeletes(posDel).select(col("_dfile"), col("_dpos"))
         val pd = if (posDel.map(_.rows).sum <= MaxCollectedKeys) broadcast(pdRaw) else pdRaw
         data = data
           .join(pd, col("_gfile") === col("_dfile") && col("_gpos") === col("_dpos"), "left_anti")
@@ -611,7 +626,7 @@ final class TransactionalTable private (
       if (eqDel.nonEmpty) {
         // Composite PKs: delete files carry every raw member column; the
         // anti-join matches on all of them (exact, never hash-domain).
-        val delRaw = spark.read.parquet(eqDel.map(_.path): _*)
+        val delRaw = readDeletes(eqDel)
           .select(pkCols.map(c => col(c).as(s"_d_$c")) :+ col("_dseq"): _*)
         val del = if (eqDel.map(_.rows).sum <= MaxCollectedKeys) broadcast(delRaw) else delRaw
         val keyCond = pkCols.map(c => col(c) === col(s"_d_$c")).reduce(_ && _)
@@ -788,7 +803,7 @@ final class TransactionalTable private (
     // Vector entries are cheaper still: the target rides in the manifest.
     val posTargets: Set[String] =
       (if (newPos.isEmpty) Set.empty[String]
-       else spark.read.parquet(newPos.map(_.path): _*)
+       else readDeletes(newPos)
          .select(col("_dfile")).distinct().collect()
          .map(r => stripScheme(r.getString(0))).toSet) ++
         newVec.flatMap(_.target).map(stripScheme)
@@ -914,7 +929,7 @@ final class TransactionalTable private (
                 !removedPaths.contains(TransactionalTable.stripScheme(tgt))
               case None if d.kind == DeleteFile.Position =>
                 val victims = victimMemo.getOrElseUpdate(d.path,
-                  spark.read.parquet(d.path).select(col("_dfile"))
+                  readDeletes(Seq(d)).select(col("_dfile"))
                     .distinct().collect()
                     .map(r => TransactionalTable.stripScheme(r.getString(0))))
                 !victims.forall(removedPaths.contains)
@@ -2988,14 +3003,16 @@ final class TransactionalTable private (
    *  Rows are stamped with the committing version (`_seq`) so merge-on-read
    *  delete files can mask only OLDER images. Single pass: no emptiness
    *  pre-check (that would execute the whole merged plan twice) — an empty
-   *  input simply yields an empty file listing.
+   *  input simply yields no entries.
    *
-   *  Manifest stats come from the PARQUET FOOTERS of the written files
-   *  (exact row counts and INT64 min/max per row group), not from re-reading
-   *  the data: commit cost is O(files), independent of batch width — at
-   *  scale, the difference between reading KBs of footers and re-scanning
-   *  every byte just written (exactly why Iceberg builds manifests from file
-   *  metadata). */
+   *  One Spark job ([[ManifestWrite]]): tasks write their files straight into
+   *  `outDir` — no temporary directory, no rename — and gather every file's
+   *  manifest stats as the rows go by: row count, bytes, the PK range in the
+   *  key domain (raw long, or the seed-42 xxhash64 of [[keyExpr]] for
+   *  string/composite PKs), [[statsCols]] min/max as the Parquet footer
+   *  reports them, and the PK Bloom of files with at most [[BloomMaxRows]]
+   *  rows. The manifest CAS is the only commit: files of an attempt that
+   *  loses it are orphans for [[removeOrphanFiles]]. */
   private def writeDataFiles(df0: DataFrame, outDir: Path, seq: Long): Seq[DataFile] = {
     // Variant shredding (see setVariantShred): materialize each declared hot
     // path as a typed physical side-column — map-only, codegen'd variant_get
@@ -3030,60 +3047,35 @@ final class TransactionalTable private (
       case s =>
         partitionCol.map(col).toSeq ++ parseSortOrder(s, lenient = true) ++ pkCols.map(col)
     }
-    val stamped = distributed.sortWithinPartitions(sortCols: _*).withColumn("_seq", lit(seq))
-    val writer = partitionSpec match {
-      // `_p` is the TRANSFORM of the source column (identity → the value
-      // itself), so the data file keeps every real column (Hive-style
-      // partitionBy would strip it from the file) and hidden partitioning
-      // (days/hours/bucket) derives its directory value here — the write
-      // half of the Iceberg partition-spec contract.
-      case Some(spec) => stamped.withColumn("_p", spec.valueExprIn(df.schema)).write.partitionBy("_p")
-      case None => stamped.write
+    val stamped = distributed.sortWithinPartitions(sortCols: _*).withColumn("_seq", stamp(seq))
+    // `_p` is the TRANSFORM of the source column (identity → the value
+    // itself), so the data file keeps every real column (Hive-style
+    // partitionBy would strip it from the file) and hidden partitioning
+    // (days/hours/bucket) derives its directory value here — the write
+    // half of the Iceberg partition-spec contract.
+    val rows = partitionSpec match {
+      case Some(spec) => stamped.withColumn("_p", spec.valueExprIn(df.schema))
+      case None => stamped
     }
-    // Rolling writer (see setMaxRecordsPerFile): bounds every part file even
-    // when `hash` distribution funnels a hot partition value through one task.
-    val capped = maxRecordsPerFile match {
-      case n if n > 0 => writer.option("maxRecordsPerFile", n)
-      case _ => writer
+    val options: Map[String, String] =
+      // Rolling writer (see setMaxRecordsPerFile): bounds every part file even
+      // when `hash` distribution funnels a hot partition value through one task.
+      (if (maxRecordsPerFile > 0) Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)
+       else Map.empty[String, String]) ++
+      // Parquet-level bloom filters on declared columns (see setParquetBloom):
+      // row-group point-lookup skipping below the manifest layer.
+      parquetBloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true") ++
+      // Declared compression codec (Iceberg write.parquet.compression-codec
+      // parity); unset = Spark's session default (snappy).
+      compressionCodec.map("compression" -> _)
+    val written = graft.util.JobLabel.labeled(spark, s"commit:write $root") {
+      ManifestWrite.write(rows, outDir.toString, partitionSpec.map(_ => "_p"), options,
+        ManifestWrite.StatsSpec(pkCols, pkHashed, statsCols, BloomMaxRows))
     }
-    // Parquet-level bloom filters on declared columns (see setParquetBloom):
-    // row-group point-lookup skipping below the manifest layer.
-    val bloomed0 = parquetBloomCols.foldLeft(capped)((w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    // Declared compression codec (Iceberg write.parquet.compression-codec
-    // parity); unset = Spark's session default (snappy).
-    val coded = compressionCodec match {
-      case Some(c) => bloomed0.option("compression", c)
-      case None => bloomed0
+    val bloomed = written.filter(_.rows > 0).map { w =>
+      DataFile(w.path, partitionFromPath(outDir, Paths.get(w.path)), w.keyMin, w.keyMax,
+        w.rows, w.bytes, bloom = w.bloom, stats = w.stats, specId = currentSpecId)
     }
-    graft.util.JobLabel.labeled(spark, s"commit:write $root") {
-      coded.mode("overwrite").parquet(outDir.toString) // overwrite: crash-retry safe
-    }
-    if (!Files.isDirectory(outDir)) return Seq.empty
-    val parts = graft.util.Fs.walkSeq(outDir)
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-    // Footers are read in parallel: a partitioned commit can produce
-    // tasks×partitions part files, and ~20 ms of sequential open() each would
-    // put an O(files) serial section back into the commit path.
-    import scala.collection.parallel.CollectionConverters._
-    val statted = parts.par.map { p =>
-      val (rows, mn, mx, colStats, _) = fileFooterStats(p)
-      DataFile(p.toString, partitionFromPath(outDir, p), mn, mx, rows, Files.size(p),
-        stats = colStats, specId = currentSpecId)
-    }.seq.toSeq.filter(_.rows > 0)
-    // ONE post-write pass over the new files' PK column builds BOTH
-    // per-file artifacts (r19 — previously two separate jobs per commit):
-    // [pkMin, pkMax] in the xxhash64 key domain for string/composite PKs
-    // (parquet footer min/max are binary there — long PKs read exact footer
-    // stats and skip the ranging half), and the small-file Bloom bitsets.
-    val bloomPaths = statted.filter(_.rows <= BloomMaxRows).map(_.path).toSet
-    val (ranges, blooms) = pkPassStats(statted.map(_.path), bloomPaths,
-      needRanges = pkHashed)
-    val ranged =
-      if (!pkHashed) statted
-      else statted.map(f => ranges.get(f.path)
-        .map { case (mn, mx) => f.copy(pkMin = mn, pkMax = mx) }.getOrElse(f))
-    val bloomed = ranged.map(f => f.copy(bloom = blooms.get(f.path)))
     if (!rowLineageEnabled) bloomed
     else {
       // Row lineage (Iceberg v3): reserve a contiguous `firstRowId` range per
@@ -3100,6 +3092,11 @@ final class TransactionalTable private (
     }
   }
 
+  /** The `_seq`/`_dseq` stamp of a commit's rows ([[graft.functions.CommitStamp]]:
+    * one compiled write plan serves every commit, whatever its version). */
+  private def stamp(seq: Long): org.apache.spark.sql.Column =
+    org.apache.spark.sql.graftshim.GraftShims.column(graft.functions.CommitStamp(seq))
+
   /** Row-lineage high-water mark of a committed version: the first `_row_id`
     * the NEXT commit may assign. 0 for pre-lineage manifests or version < 0
     * (empty table). Monotone non-decreasing across commits — rollback
@@ -3114,83 +3111,9 @@ final class TransactionalTable private (
     }
   }
 
-  /**
-   * PK Bloom filters for freshly written SMALL files (one 8 KiB bitset each,
-   * k=5): one distributed pass over just the PK column of the new files
-   * (columnar read — a few % of the bytes just written), partial bitsets
-   * OR-merged per file. Big files skip the bloom (it would saturate and the
-   * manifest would bloat); their min/max range keeps pruning them. RDD
-   * mapPartitions is deliberate here: building per-file bitsets is per-row
-   * imperative work with no relational shape.
-   */
-  /** The unified post-write PK pass (r19): per-file bloom bitsets for the
-    * files in `bloomPaths` (≤ [[BloomMaxRows]] rows — bigger files would
-    * saturate the 8 KiB bitset) and, when `needRanges` (hashed PKs),
-    * per-file [min, max] of the key hash for EVERY new file. One columnar
-    * Spark job over just the PK column(s) instead of the two jobs
-    * (groupBy-ranges + bloom mapPartitions) every hashed-PK commit paid.
-    * Partials merge driver-side — one 8 KiB bitset + two longs per (file,
-    * touching partition), and a small file is read by ~one partition, so
-    * this is O(files × 8 KiB) without the shuffle stage a reduceByKey
-    * would add to every commit. */
-  private def pkPassStats(allPaths: Seq[String], bloomPaths: Set[String],
-      needRanges: Boolean)
-      : (Map[String, (Long, Long)], Map[String, String]) = {
-    val readPaths = if (needRanges) allPaths else bloomPaths.toSeq
-    if (readPaths.isEmpty) return (Map.empty, Map.empty)
-    val pkField = StructType(pkCols.map(schema(_)))
-    val bloomSet0 = bloomPaths // plain manifest paths (worker normalizes URIs)
-    val nWords = BloomBits / 64
-    val partials = graft.util.JobLabel.labeled(spark, s"commit:pk-pass $root") {
-      spark.read.schema(pkField).parquet(readPaths: _*)
-        .select(col("_metadata.file_path").as("f"), keyExpr.as("k"))
-        .rdd.mapPartitions { it =>
-          // per-file accumulator: (bitset or null, min, max); URI → plain
-          // path memoized once per file per partition
-          val plainOf = scala.collection.mutable.HashMap.empty[String, String]
-          val acc = scala.collection.mutable.HashMap
-            .empty[String, (Array[Long], Array[Long])] // (bitsetOrNull, [mn, mx])
-          it.foreach { r =>
-            if (!r.isNullAt(1)) {
-              val plain = plainOf.getOrElseUpdate(r.getString(0), {
-                val u = r.getString(0)
-                try new java.net.URI(u).getPath catch { case _: Exception => u }
-              })
-              val k = r.getLong(1)
-              val e = acc.getOrElseUpdate(plain, (
-                if (bloomSet0.contains(plain)) new Array[Long](nWords) else null,
-                Array(Long.MaxValue, Long.MinValue)))
-              if (e._1 != null) bloomSet(e._1, k)
-              if (k < e._2(0)) e._2(0) = k
-              if (k > e._2(1)) e._2(1) = k
-            }
-          }
-          acc.iterator
-        }
-        .collect()
-    }
-    val bits = scala.collection.mutable.HashMap.empty[String, Array[Long]]
-    val rng = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-    partials.foreach { case (plain, (words, mnmx)) =>
-      if (words != null) bits.get(plain) match {
-        case Some(a) => var i = 0; while (i < a.length) { a(i) |= words(i); i += 1 }
-        case None => bits(plain) = words
-      }
-      rng.get(plain) match {
-        case Some((mn, mx)) =>
-          rng(plain) = (math.min(mn, mnmx(0)), math.max(mx, mnmx(1)))
-        case None => rng(plain) = (mnmx(0), mnmx(1))
-      }
-    }
-    (rng.toMap, bits.map { case (p, w) => p -> graft.util.Bloom.encode(w) }.toMap)
-  }
-
   /** Table columns (besides the PK) whose footer stats are worth carrying in
     * the manifest: integral + timestamp (both stored as parquet INT32/INT64,
-    * so footer min/max unbox to Long exactly). STRICT val, not lazy: a lazy
-    * val initializer locks the instance monitor, and this is read from
-    * parallel-collection workers while a `synchronized` mutation holds that
-    * monitor — lazy here deadlocks the commit path. */
+    * so footer min/max unbox to Long exactly). Resolved once per handle. */
   private val statsCols: Seq[String] = {
     import org.apache.spark.sql.types._
     schema.fields.collect {
@@ -3201,21 +3124,16 @@ final class TransactionalTable private (
     }.toSeq
   }
 
-  /** Row count + PK min/max straight from a written file's parquet footer.
-    * Stats are exact for integral types; a file whose PK stats are absent
-    * (all-null column) gets the never-prunable full range — conservative,
-    * not silently prunable-to-nothing. */
-  private def pkFooterStats(file: Path, keyCol: String = pk): (Long, Long, Long) =
-    { val (r, mn, mx, _, _) = fileFooterStats(file, withColStats = false, keyCol); (r, mn, mx) }
-
-  /** pkFooterStats plus per-column min/max for [[statsCols]] and the file's
-    * lower-cased column names (same single footer read — addFiles uses the
-    * names for its schema guard without a second open). Columns whose stats
-    * are absent or non-numeric (e.g. INT96 timestamps from foreign writers)
-    * are simply omitted — absent stats mean "never prunable", the
-    * conservative direction. */
-  private def fileFooterStats(file: Path, withColStats: Boolean = true,
-      keyCol: String = pk)
+  /** Row count, PK min/max, [[statsCols]] min/max and the lower-cased column
+    * names of a FOREIGN Parquet file, from one footer read ([[addFiles]];
+    * files the table writes get the same stats from their write task, see
+    * [[writeDataFiles]]). Stats are exact for integral types; a file whose
+    * PK stats are absent (all-null column) gets the never-prunable full
+    * range — conservative, not silently prunable-to-nothing. Columns whose
+    * stats are absent or non-numeric (e.g. INT96 timestamps) are simply
+    * omitted — absent stats mean "never prunable", the conservative
+    * direction. */
+  private[table] def fileFooterStats(file: Path)
       : (Long, Long, Long, Map[String, (Long, Long)], Set[String]) = {
     val input = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri), spark.sessionState.newHadoopConf())
@@ -3236,12 +3154,10 @@ final class TransactionalTable private (
         if (nums.isEmpty || nums.length != ss.length) None
         else Some((nums.map(_._1).min, nums.map(_._2).max))
       }
-      val (pkMin, pkMax) = range(statsOf(keyCol)).getOrElse((Long.MinValue, Long.MaxValue))
-      val colStats =
-        if (!withColStats) Map.empty[String, (Long, Long)]
-        else statsCols.flatMap { c =>
-          range(statsOf(c)).map(c.toLowerCase(java.util.Locale.ROOT) -> _)
-        }.toMap
+      val (pkMin, pkMax) = range(statsOf(pk)).getOrElse((Long.MinValue, Long.MaxValue))
+      val colStats = statsCols.flatMap { c =>
+        range(statsOf(c)).map(c.toLowerCase(java.util.Locale.ROOT) -> _)
+      }.toMap
       val fieldNames = reader.getFooter.getFileMetaData.getSchema.getFields
         .asScala.map(_.getName.toLowerCase(java.util.Locale.ROOT)).toSet
       (rows, pkMin, pkMax, colStats, fieldNames)
@@ -3261,35 +3177,30 @@ final class TransactionalTable private (
   /** Write a merge-on-read delete file — equality (pk, _dseq) rows or
     * positional (_dfile, _dpos) rows per `kind`. Returns None when the input
     * is empty. The manifest entry's path is the written directory (delete
-    * sets are small; part-file granularity isn't needed). For positional
+    * sets are small; part-file granularity isn't needed), so the write
+    * sweeps every file no committed task reported out of it
+    * ([[ManifestWrite]]'s `sweepUncommitted`): a failed task attempt's file
+    * can never be read as part of a committed delete set. For positional
     * files the pk stats degrade to the never-prunable full range (no pk
     * column), which is conservative and correct.
     *
-    * Hashed PKs (string/composite): data-file pkMin/pkMax live in the
-    * xxhash64 domain, so the delete file's range must too, or changes()'s
-    * carried-file pruning degrades to O(table) — the raw key columns'
-    * footer stats are non-numeric. An extra `_dhash` column is written in
-    * the same pass (keyExpr, identical to the data-file ranging hash) and
-    * the footer stats are read from IT; the anti-join in scanWithDeletes
-    * still matches on the raw member columns, exact as before. */
+    * Same one-job path as [[writeDataFiles]]: the write task gathers rows,
+    * bytes and the key range. Hashed PKs (string/composite): data-file
+    * pkMin/pkMax live in the xxhash64 domain, so the delete file's range is
+    * the same seed-42 hash of the raw member columns (or changes()'s
+    * carried-file pruning would degrade to O(table)); the anti-join in
+    * scanWithDeletes still matches on the raw member columns, exact. */
   private def writeDeleteFile(keys: DataFrame, outDir: Path, seq: Long,
       kind: String = DeleteFile.Equality): Option[DeleteFile] = {
-    val hashRanged = kind == DeleteFile.Equality && pkHashed
-    val out = keys.withColumn("_dseq", lit(seq))
-    (if (hashRanged) out.withColumn("_dhash", keyExpr) else out)
-      .write.mode("overwrite").parquet(outDir.toString)
-    // Stats from footers, like writeDataFiles (an empty key set writes no
-    // part files → None).
-    val parts = graft.util.Fs.walkSeq(outDir)
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-    val statCol = if (hashRanged) "_dhash" else pk
-    val stats = parts.map(p => pkFooterStats(p, statCol)).filter(_._1 > 0)
-    if (stats.isEmpty) None
-    else {
-      val bytes = parts.map(Files.size).sum
-      Some(DeleteFile(outDir.toString, stats.map(_._2).min, stats.map(_._3).max,
-        stats.map(_._1).sum, bytes, kind))
+    val keyCols = if (kind == DeleteFile.Equality) pkCols else Nil
+    val written = graft.util.JobLabel.labeled(spark, s"commit:delete-write $root") {
+      ManifestWrite.write(keys.withColumn("_dseq", stamp(seq)), outDir.toString, None,
+        Map.empty, ManifestWrite.StatsSpec(keyCols, pkHashed), sweepUncommitted = true)
     }
+    val live = written.filter(_.rows > 0)
+    if (live.isEmpty) None
+    else Some(DeleteFile(outDir.toString, live.map(_.keyMin).min, live.map(_.keyMax).max,
+      live.map(_.rows).sum, written.map(_.bytes).sum, kind))
   }
 
   /**
@@ -3460,7 +3371,7 @@ final class TransactionalTable private (
         // itself — zero loads.
         val posTargets: Set[String] =
           (if (posDel.isEmpty) Set.empty[String]
-           else spark.read.parquet(posDel.map(_.path): _*)
+           else readDeletes(posDel)
              .select(col("_dfile")).distinct().collect()
              .map(r => stripScheme(r.getString(0))).toSet) ++
             vecDel.flatMap(_.target).map(stripScheme)
@@ -3469,7 +3380,7 @@ final class TransactionalTable private (
         val eqAffected: Seq[DataFile] =
           if (eqDel.isEmpty) Seq.empty
           else affectedFiles(snap,
-            spark.read.parquet(eqDel.map(_.path): _*).select(keyExpr.as("_k")).distinct())._1
+            readDeletes(eqDel).select(keyExpr.as("_k")).distinct())._1
         val eqPaths = eqAffected.map(_.path).toSet
         // Path membership can't prune chunks (refs carry ranges, not member
         // paths) — resolving positional victims costs one full metadata pass,
@@ -4279,13 +4190,10 @@ object TransactionalTable {
 
   // --- PK Bloom filter: bit-math shared with the SQL planner via
   // graft.util.Bloom (fixed 2^16 bits, k=5, deterministic) ---
-  val BloomBits: Int = graft.util.Bloom.Bits
   /** Files above this row count skip the bloom: at 8 KiB the bitset would
     * saturate (fp → 1) and the manifest would carry dead weight. */
   val BloomMaxRows = 8192L
 
-  private[table] def bloomSet(words: Array[Long], key: Long): Unit =
-    graft.util.Bloom.set(words, key)
   private[table] def bloomContains(words: Array[Long], key: Long): Boolean =
     graft.util.Bloom.contains(words, key)
   private[table] def bloomWords(b64: String): Array[Long] =
