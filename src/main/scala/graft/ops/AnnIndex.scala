@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
-import graft.table.{PartitionTransform, TransactionalTable}
+import graft.table.{ManifestFiles, PartitionTransform, TransactionalTable}
+import graft.util.Frames
 
 /**
  * Persistent ANN index — the similarity twin of [[DedupIndex]], the
@@ -43,13 +44,21 @@ object AnnIndex {
   final case class Handle(assignments: TransactionalTable,
       centroids: TransactionalTable) {
     /** The frozen quantizer as driver-side literals (cells × dim, bounded).
-      * Memoized per (root, committed version) — centroids change only on
+      * Memoized per committed manifest — centroids change only on
       * create/retrain, yet every assignment/probe/encode leg called this,
       * paying one collect JOB per micro-batch for an immutable few-KB read
-      * (r19 JobBreak: 4 jobs per appendBatch, 1 was this). The version
-      * probe is a one-line file read, so staleness is impossible. */
+      * (r19 JobBreak: 4 jobs per appendBatch, 1 was this). The key is the
+      * root, the version AND the manifest's chunk paths (random per write):
+      * an index dropped and re-created at the same root returns to the same
+      * version number with different centroids. One manifest read, no
+      * chunk load. */
     def centroidVectors: Seq[Seq[Double]] = {
-      val key = (centroids.root, centroids.currentVersion)
+      val snap = centroids.snapshot
+      val written = snap.files match {
+        case mf: ManifestFiles => mf.chunks.map(_.path)
+        case fs => fs.map(_.path)
+      }
+      val key = (centroids.root, snap.version, written)
       val hit = centroidCache.get(key)
       if (hit != null) hit
       else {
@@ -62,10 +71,10 @@ object AnnIndex {
     }
   }
 
-  /** See [[Handle.centroidVectors]] — keyed by (root, version), so every
+  /** See [[Handle.centroidVectors]] — keyed by one manifest write, so every
     * entry is immutable; bounded by periodic clear. */
   private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[Seq[Double]]]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Seq[String]), Seq[Seq[Double]]]()
 
   private def unit(vecCol: String): Column = {
     val v = SimilarityOps.asDouble(col(vecCol))
@@ -214,13 +223,11 @@ object AnnIndex {
     graft.util.BatchStats.timed("ann_delete_batch") {
       val spark = h.assignments.spark
       val keys = ids.select(col(idCol).cast("long").as("vec_id"))
-      def emptyOf(sch: StructType): DataFrame = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      h.assignments.merge(emptyOf(h.assignments.schema), keys, batchId,
+      h.assignments.merge(Frames.empty(spark, h.assignments.schema), keys, batchId,
         writerId = Some(DeleteWriter))
       // the codes row of a deleted vector would keep ADC-ranking it from
       // the compressed domain — same keys, same fenced epoch
-      codes.foreach(t => t.merge(emptyOf(t.schema), keys, batchId,
+      codes.foreach(t => t.merge(Frames.empty(spark, t.schema), keys, batchId,
         writerId = Some(DeleteWriter)))
     }
 

@@ -82,8 +82,7 @@ object DedupIndex {
     val keys = ids.select(col(idCol).cast("long").as("id"))
       .select(col("id"), explode(sequence(lit(0L), lit(nBands - 1L))).as("band"))
       .select(TextOps.md5Hash60(concat_ws(":", col("id"), col("band"))).as("sig_id"))
-    val emptyUpserts = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], index.schema)
+    val emptyUpserts = graft.util.Frames.empty(spark, index.schema)
     index.merge(emptyUpserts, keys, batchId, writerId = Some(DeleteWriter))
   }
 

@@ -372,9 +372,7 @@ object ExportOps {
     val ivs = only.getOrElse(intervals(spark, exportRoot))
     val readSchema = StructType.fromDDL(
       s"shard INT, bin LONG, pos INT, $idCol LONG, n_tokens LONG, $textCol $textType")
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      readSchema.add("_to", "long"))
+    val empty = graft.util.Frames.empty(spark, readSchema.add("_to", "long"))
     val pubs = ivs.filter(_.nDocs > 0).map(iv =>
       spark.read.schema(readSchema).parquet(dirOf(exportRoot, iv.fromV, iv.toV))
         .select((readSchema.fieldNames.map(col) :+ lit(iv.toV).as("_to")).toSeq: _*))

@@ -98,8 +98,7 @@ object KeepBestIndex {
       .select("sig_id").localCheckpoint(true)
     val n = stale.count()
     if (n > 0) {
-      val emptyUpserts = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schema)
+      val emptyUpserts = graft.util.Frames.empty(spark, Schema)
       index.mergeAdhoc(emptyUpserts, stale)
     }
     n

@@ -72,8 +72,7 @@ object VideoDedupIndex {
         .join(ids.select(col(idCol).cast("long").as("media_id")),
           Seq("media_id"), "left_semi")
         .select("sig_id").localCheckpoint(true)
-      val emptyUpserts = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], index.schema)
+      val emptyUpserts = graft.util.Frames.empty(spark, index.schema)
       index.merge(emptyUpserts, keys, batchId,
         writerId = Some(DedupIndex.DeleteWriter))
     }

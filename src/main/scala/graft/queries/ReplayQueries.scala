@@ -75,9 +75,7 @@ object ReplayQueries {
       StructField("event_type", StringType), StructField("value", DoubleType)))
     val t = TransactionalTable.create(s, root, sch, "event_id", None)
     val ev = Tables.events(s, d).select(col("event_id"), col("event_type"), col("value"))
-    val noDeletes = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("event_id", LongType))))
+    val noDeletes = graft.util.Frames.empty(s, StructType(Seq(StructField("event_id", LongType))))
     t.merge(ev, noDeletes, batchId = 0, mode)
     val v1 = t.currentVersion
     t.merge(
@@ -114,10 +112,8 @@ object ReplayQueries {
       StructField("event_id", LongType), StructField("value", DoubleType)))
     val t = TransactionalTable.create(s, root, sch, "event_type,event_id", None)
     val ev = Tables.events(s, d).select(col("event_type"), col("event_id"), col("value"))
-    val noDeletes = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("event_type", StringType),
-        StructField("event_id", LongType))))
+    val noDeletes = graft.util.Frames.empty(s,
+      StructType(Seq(StructField("event_type", StringType), StructField("event_id", LongType))))
     t.merge(ev, noDeletes, batchId = 0, mode)
     t.merge(
       ev.filter(col("event_id") % 5 === 0 && col("event_id") % 7 =!= 0)
@@ -146,9 +142,7 @@ object ReplayQueries {
     val ev = Tables.events(s, d).select(col("event_id"),
       concat(lit("k"), col("event_id").cast("string")).as("id"),
       col("event_type"), col("value"))
-    val noDeletes = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("id", StringType))))
+    val noDeletes = graft.util.Frames.empty(s, StructType(Seq(StructField("id", StringType))))
     t.merge(ev.drop("event_id"), noDeletes, batchId = 0, mode)
     t.merge(
       ev.filter(col("event_id") % 5 === 0 && col("event_id") % 7 =!= 0)
@@ -3319,9 +3313,7 @@ object ReplayQueries {
           StructField("user_id", LongType), StructField("event_type", StringType),
           StructField("value", DoubleType)))
         val t = TransactionalTable.create(s, root, sch, "event_id", None)
-        val noDeletes = s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("event_id", LongType))))
+        val noDeletes = graft.util.Frames.empty(s, StructType(Seq(StructField("event_id", LongType))))
         t.merge(Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
           noDeletes, batchId = 0)

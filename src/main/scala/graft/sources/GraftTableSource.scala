@@ -189,9 +189,8 @@ private[sources] final class GraftTableSink(root: String, mode: String,
               (aligned(df.filter(not(isDel))),
                 df.filter(isDel).select(t.pkCols.map(col): _*))
             case None =>
-              (aligned(df), spark.createDataFrame(
-                spark.sparkContext.emptyRDD[Row],
-                StructType(t.pkCols.map(c => t.schema(c)))))
+              (aligned(df),
+                graft.util.Frames.empty(spark, StructType(t.pkCols.map(c => t.schema(c)))))
           }
           t.merge(ups, dels, batchId, mergeMode, writerId = writerId)
       }

@@ -69,14 +69,6 @@ object CatalogLinks {
   private def vPath(nsDir: String, v: Long): Path =
     linksDir(nsDir).resolve(s"v$v.json")
 
-  private val VFile = """v(\d+)\.json""".r
-
-  private def versionsPresent(nsDir: String, io: CommitIO): Seq[Long] =
-    io.list(linksDir(nsDir)).flatMap(_.getFileName.toString match {
-      case VFile(n) => Some(n.toLong)
-      case _ => None
-    })
-
   /** The live map = the MAX version present (one prefix list + one read).
     * A read racing the keep-last-N sweep (its listed head retired by a
     * much-later commit's GC) re-lists — bounded: each retry means ≥
@@ -84,9 +76,9 @@ object CatalogLinks {
   def read(nsDir: String, io: CommitIO): Links = {
     var attempts = 0
     while (true) {
-      val vs = versionsPresent(nsDir, io)
+      val vs = io.versions(linksDir(nsDir))
       if (vs.isEmpty) return Links(0L, Map.empty)
-      val v = vs.max
+      val v = vs.last
       try {
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
         val node = om.readTree(io.read(vPath(nsDir, v)))
@@ -141,7 +133,7 @@ object CatalogLinks {
   private val KeepVersions = 8L
 
   private def gc(nsDir: String, committed: Long, io: CommitIO): Unit =
-    versionsPresent(nsDir, io).filter(_ <= committed - KeepVersions)
+    io.versions(linksDir(nsDir)).filter(_ <= committed - KeepVersions)
       .foreach { v =>
         try io.delete(vPath(nsDir, v))
         catch { case scala.util.control.NonFatal(_) => () }

@@ -75,20 +75,12 @@ object GraftViewStore {
   private def chainPath(root: String, v: Long): Path =
     Paths.get(root, ChainDir, s"v$v.json")
 
-  private val VFile = """v(\d+)\.json""".r
-
-  private def versionsPresent(root: String, io: graft.table.CommitIO): Seq[Long] =
-    io.list(Paths.get(root, ChainDir)).flatMap(_.getFileName.toString match {
-      case VFile(n) => Some(n.toLong)
-      case _ => None
-    })
-
   /** Live chain version = the MAX version present (one prefix list — the
     * [[CatalogLinks]] liveness rule: claims only ever target live+1, so
     * the top of the chain can never gap, and the keep-last-N sweep only
     * ever removes a prefix); 0 = no chain (legacy file or nothing). */
   private def chainVersion(root: String, io: graft.table.CommitIO): Long =
-    versionsPresent(root, io).maxOption.getOrElse(0L)
+    io.versions(Paths.get(root, ChainDir)).lastOption.getOrElse(0L)
 
   def exists(root: String, io: graft.table.CommitIO): Boolean =
     chainVersion(root, io) > 0 || io.exists(legacyPath(root))
@@ -241,7 +233,7 @@ object GraftViewStore {
             // keep-last-N sweep (the CatalogLinks GC contract): prefix-only
             // deletes keep the max-version liveness rule intact, and an MV
             // refresh cadence cannot grow the chain without bound
-            versionsPresent(root, io).filter(_ <= v + 1 - KeepVersions)
+            io.versions(Paths.get(root, ChainDir)).filter(_ <= v + 1 - KeepVersions)
               .foreach { old =>
                 try io.delete(chainPath(root, old))
                 catch { case scala.util.control.NonFatal(_) => () }
@@ -326,7 +318,7 @@ object GraftViewStore {
       // the view still exists (stale but whole) and the drop is
       // re-runnable. The other order would leave orphaned high versions a
       // later CREATE's fresh v1 would hide behind.
-      versionsPresent(root, io).sorted.reverse
+      io.versions(Paths.get(root, ChainDir)).reverse
         .foreach(v => io.delete(chainPath(root, v)))
       try io.delete(legacyPath(root))
       catch { case scala.util.control.NonFatal(_) => () }

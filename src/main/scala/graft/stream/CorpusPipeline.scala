@@ -261,8 +261,7 @@ object CorpusPipeline {
       val spark = ids.sparkSession
       val keys = ids.select(col(idCol).cast("long").as("doc_id"))
         .localCheckpoint(true)
-      val emptyUpserts = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpus.schema)
+      val emptyUpserts = graft.util.Frames.empty(spark, corpus.schema)
       corpus.merge(emptyUpserts, keys, batchId,
         writerId = Some("corpus-takedown"))
       if (keepBest) graft.ops.KeepBestIndex.deleteBatch(index, keys, batchId)

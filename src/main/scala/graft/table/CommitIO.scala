@@ -1,13 +1,14 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
 /**
- * The COMMIT-PROTOCOL I/O contract (r16 verdict missing #4 — object-store
- * commit portability): every correctness-bearing write in the table's
- * commit path runs through these primitives, so the protocol's storage
+ * The table's METADATA I/O contract (r16 verdict missing #4 — object-store
+ * commit portability): every read, probe, listing, write and delete of a
+ * table's metadata runs through these primitives, so the protocol's storage
  * requirements are EXPLICIT instead of implied by java.nio idioms:
  *
  *  - [[putIfAbsent]] — the version CLAIM. POSIX: `CREATE_NEW` (atomic).
@@ -24,26 +25,43 @@ import scala.jdk.CollectionConverters._
  *    rename-is-copy+delete is irrelevant to this protocol: nothing in the
  *    commit path requires rename semantics, only full-object replace
  *    (proven by the simulated store spec, ObjectStoreCommitSpec).
- *  - [[read]] / [[exists]] / [[modifiedAtMs]] / [[delete]] — plain object
- *    operations every store has.
+ *  - [[read]] / [[exists]] / [[modifiedAtMs]] / [[delete]] / [[list]] —
+ *    plain object operations every store has.
  *
- * Bulk data and delete files do not go through this contract, and need no
- * rename either: write tasks put every Parquet file straight at its final
- * path inside a fresh per-attempt commit directory
- * (`org.apache.spark.sql.graftshim.ManifestWrite` — no `_temporary`
- * directory, no `_SUCCESS` file) and report it with its stats to the
- * driver. The manifest claim above is the ONLY commit: until it lands, the
- * written files are orphans no manifest references, swept by
- * `removeOrphanFiles`. A delete-file directory, referenced as a whole, is
- * swept of every file no committed task attempt reported before its claim.
+ * Objects covered (all through the handle's `commitIo`):
+ *  - `_current` and a branch's `_current` — the version pointers;
+ *  - `manifest/v<N>.json` — the manifests (claimed, never replaced);
+ *  - `manifest/chunks/c-<uuid>.json` — immutable manifest chunks (claimed);
+ *  - `manifest/branches/<b>/` — branch fork manifests, commits, chunks and
+ *    the `_published` mark;
+ *  - `_refs.json` (tags), `_expiry_floor`, `_table.json`, `_ndv.json`, the
+ *    `_replace_pending` marker;
+ *  - the view metadata chain (`_view/v<N>.json`) and the catalog link
+ *    chain (`_catalog_links/v<N>.json`) of graft.sql.
  *
- * Explicitly OUT of the contract (a documented requirement, not an
- * abstraction): `ALTER TABLE RENAME TO`'s whole-directory move — on an
- * object store that move is a copy+delete whose crash window materializes
- * the dual-root state the rename heal marker already REFUSES as ambiguous
- * rather than guessing (`TransactionalTable` heal path); a production
- * object-store deployment renames via catalog metadata, not directory
- * moves.
+ * Explicitly OUT of the contract, each for a reason:
+ *  - Parquet data files, delete files and deletion-vector files: bulk data,
+ *    written by tasks straight at their final path inside a fresh
+ *    per-attempt commit directory
+ *    (`org.apache.spark.sql.graftshim.ManifestWrite` — no `_temporary`
+ *    directory, no `_SUCCESS` file, no rename) and reported with their
+ *    stats to the committing handle. The manifest claim above is the
+ *    ONLY commit: until it lands, the written files are orphans no
+ *    manifest references.
+ *    A delete-file directory, referenced as a whole, is swept of every
+ *    file no committed task attempt reported before its claim. Expiry
+ *    deletes unreferenced data and delete files directly.
+ *  - `removeOrphanFiles`' walk of the data directory: it lists and stats
+ *    data files on executors, where a handle's io does not travel.
+ *  - `add_files`' stat of the foreign Parquet files it registers: they are
+ *    data outside the table root.
+ *  - `ALTER TABLE RENAME TO`'s whole-directory move (`renameRoot` and its
+ *    heal path) — on an object store that move is a copy+delete whose crash
+ *    window materializes the dual-root state the rename heal marker already
+ *    REFUSES as ambiguous rather than guessing; a production object-store
+ *    deployment renames via catalog metadata, not directory moves.
+ *  - Executor-side chunk parses (`ChunkJson.parse`) read through
+ *    [[PosixCommitIO]]: a handle's io does not travel to executors.
  */
 trait CommitIO {
   /** Create `path` with `bytes` iff absent — the atomic claim. MUST throw
@@ -61,6 +79,9 @@ trait CommitIO {
     * the new object in full, never a torn intermediate. */
   def putAtomic(path: Path, bytes: Array[Byte]): Unit
 
+  /** The whole object. MUST throw [[java.nio.file.NoSuchFileException]]
+    * when it is absent: single-read paths ([[readIfExists]], manifest
+    * reads) map that to "not there" without a separate probe. */
   def read(path: Path): Array[Byte]
   def exists(path: Path): Boolean
   def modifiedAtMs(path: Path): Long
@@ -73,6 +94,28 @@ trait CommitIO {
     * GC can retire old chain versions without breaking liveness (live =
     * the max version present). */
   def list(dir: Path): Seq[Path]
+
+  /** [[read]], or None when the object is absent — one read, no probe. */
+  def readIfExists(path: Path): Option[Array[Byte]] =
+    try Some(read(path)) catch { case _: NoSuchFileException => None }
+
+  /** A numeric object (version pointer, expiry floor, publish mark): its
+    * decimal content, None when absent. */
+  def readLong(path: Path): Option[Long] =
+    readIfExists(path).map(b => new String(b, StandardCharsets.UTF_8).trim.toLong)
+
+  /** The versions of the `v<N>.json` objects directly under `dir`,
+    * ascending — one prefix [[list]]. The one place the chain naming rule
+    * lives: table manifests, branch manifests, view and link chains. */
+  def versions(dir: Path): Seq[Long] =
+    list(dir).flatMap(p => p.getFileName.toString match {
+      case CommitIO.VersionFile(n) => Some(n.toLong)
+      case _ => None
+    }).sorted
+}
+
+object CommitIO {
+  private val VersionFile = """v(\d+)\.json""".r
 }
 
 /** The POSIX-filesystem implementation (the local / HDFS-like posture):

@@ -1,6 +1,8 @@
 package graft.table
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
+
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -24,8 +26,8 @@ import org.apache.spark.sql.functions.{col, hll_sketch_agg}
  * rescan (HLL union = distinct-of-union, exact under overlap; deletes make
  * a stale NDV an upper bound, the safe direction for CBO).
  *
- * Persistence: `_ndv.json` at the table root, atomic tmp+ATOMIC_MOVE like
- * every other metadata write.
+ * Persistence: `_ndv.json` at the table root, published with the table's
+ * [[CommitIO]] `putAtomic` like every other metadata write.
  */
 object NdvStats {
 
@@ -52,10 +54,7 @@ object NdvStats {
       bytes.foreach(b => entry.put("sketch", java.util.Base64.getEncoder.encodeToString(b)))
       c.toLowerCase(java.util.Locale.ROOT) -> ndv
     }.toMap
-    val tmp = Files.createTempFile(Paths.get(t.root), "_ndv", ".tmp")
-    Files.write(tmp, om.writeValueAsBytes(node))
-    Files.move(tmp, path(t.root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    t.commitIo.putAtomic(path(t.root), om.writeValueAsBytes(node))
     estimates
   }
 
@@ -67,20 +66,15 @@ object NdvStats {
   /** Recorded stats: (analyzed snapshot version, lower-cased col → NDV).
     * Served to the planner even when the snapshot has moved on — an
     * approximate-but-stale cardinality beats none for CBO (the Iceberg
-    * posture); `analyzedVersion` is exposed for observability. */
-  def read(root: String): Option[(Long, Map[String, Long])] = {
-    val p = path(root)
-    if (!Files.exists(p)) return None
-    try {
-      val node = new ObjectMapper().readTree(Files.readAllBytes(p))
-      val cols = node.get("cols")
-      val m = cols.properties().iterator()
-      val out = Map.newBuilder[String, Long]
-      while (m.hasNext) {
-        val e = m.next()
-        out += e.getKey -> e.getValue.get("ndv").asLong()
-      }
-      Some((node.get("version").asLong(), out.result()))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+    * posture); `analyzedVersion` is exposed for observability. Read by path,
+    * like [[TransactionalTable.open]], through [[PosixCommitIO]]. */
+  def read(root: String): Option[(Long, Map[String, Long])] =
+    PosixCommitIO.readIfExists(path(root)).flatMap { bytes =>
+      try {
+        val node = new ObjectMapper().readTree(bytes)
+        val out = node.get("cols").properties().asScala
+          .map(e => e.getKey -> e.getValue.get("ndv").asLong()).toMap
+        Some((node.get("version").asLong(), out))
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
 }

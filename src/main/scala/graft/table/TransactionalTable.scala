@@ -310,11 +310,24 @@ final class TransactionalTable private (
     dataDir.resolve(
       s"v$version$tag-${java.lang.Long.toHexString(java.util.concurrent.ThreadLocalRandom.current().nextLong() & 0xffffffffL)}")
 
-  def currentVersion: Long = new String(Files.readAllBytes(pointerPath)).trim.toLong
+  private def manifestPath(version: Long): Path = manifestDir.resolve(s"v$version.json")
+
+  /** The pointer's version; None before the first commit. */
+  private def pointerVersion: Option[Long] = commitIo.readLong(pointerPath)
+
+  def currentVersion: Long = pointerVersion.getOrElse(
+    throw new java.nio.file.NoSuchFileException(pointerPath.toString))
+
+  /** Retained versions up to the current one, ascending — one listing, so an
+    * expired version or a publish numbering hole is simply absent, and a
+    * claim ahead of the pointer (in flight or crashed) is not included. */
+  private def committedVersions: Seq[Long] = {
+    val current = currentVersion
+    commitIo.versions(manifestDir).filter(_ <= current)
+  }
 
   /** True when `version`'s manifest is retained (streaming offsets, tools). */
-  def manifestExists(version: Long): Boolean =
-    Files.exists(manifestDir.resolve(s"v$version.json"))
+  def manifestExists(version: Long): Boolean = commitIo.exists(manifestPath(version))
 
   /** Smallest version that can only be missing due to a publish numbering
     * hole, never expiry: versions BELOW the floor may have been swept by
@@ -322,28 +335,9 @@ final class TransactionalTable private (
     * is then a hole). Untagged-version caveat does not arise: the floor is
     * the expiry cutoff, and tagged survivors below it only ADD retained
     * manifests, never holes. */
-  def expiryFloor: Long = {
-    val p = Paths.get(root, "_expiry_floor")
-    if (Files.exists(p)) new String(Files.readAllBytes(p)).trim.toLong else 0L
-  }
+  def expiryFloor: Long = commitIo.readLong(Paths.get(root, "_expiry_floor")).getOrElse(0L)
 
   def snapshot: Snapshot = snapshotAt(currentVersion)
-
-  private def parseDataFile(f: com.fasterxml.jackson.databind.JsonNode): DataFile =
-    DataFile(
-      f.get("path").asText(),
-      if (f.get("partition").isNull) None else Some(f.get("partition").asText()),
-      f.get("pkMin").asLong(), f.get("pkMax").asLong(), f.get("rows").asLong(),
-      // pre-`bytes` manifests: stat once on read (local legacy only)
-      if (f.has("bytes")) f.get("bytes").asLong()
-      else Files.size(Paths.get(f.get("path").asText())),
-      if (f.has("bloom")) Some(f.get("bloom").asText()) else None,
-      if (!f.has("stats")) Map.empty
-      else f.get("stats").properties().asScala.map { e =>
-        e.getKey -> (e.getValue.get(0).asLong(), e.getValue.get(1).asLong())
-      }.toMap,
-      if (f.has("specId")) f.get("specId").asInt() else 0,
-      if (f.has("frid")) Some(f.get("frid").asLong()) else None)
 
   /** Load one immutable manifest chunk (cached globally by path — chunks are
     * write-once, so the cache never goes stale). */
@@ -352,8 +346,7 @@ final class TransactionalTable private (
     if (cached != null) cached
     else {
       chunkLoads.incrementAndGet()
-      val node = mapper.readTree(Files.readAllBytes(Paths.get(path)))
-      val files = node.get("files").elements().asScala.map(parseDataFile).toIndexedSeq
+      val files = ChunkJson.fromBytes(commitIo.read(Paths.get(path)))
       if (chunkCache.size > MaxCachedChunks) chunkCache.clear()
       chunkCache.put(path, files)
       files
@@ -363,7 +356,7 @@ final class TransactionalTable private (
   /** Chunk paths referenced by a version's manifest (empty for legacy inline
     * manifests). Manifest-JSON-only — no chunk is opened. */
   private def chunkPathsOf(version: Long): Seq[String] =
-    chunkRefsOf(version).map(_.path)
+    chunkRefsOf(manifest(version)).map(_.path)
 
   private def parseChunkRef(c: com.fasterxml.jackson.databind.JsonNode): ChunkRef =
     ChunkRef(c.get("path").asText(), c.get("n").asInt(),
@@ -381,24 +374,29 @@ final class TransactionalTable private (
       }.toMap,
       if (c.has("minRows")) c.get("minRows").asLong() else -1L)
 
-  /** Chunk refs (with stats) of a version's manifest — JSON-only, no chunk
-    * is opened. Empty for legacy inline manifests. */
-  private def chunkRefsOf(version: Long): Seq[ChunkRef] = {
-    val node = mapper.readTree(Files.readAllBytes(manifestDir.resolve(s"v$version.json")))
+  /** Chunk refs (with stats) of a manifest — JSON-only, no chunk is
+    * opened. Empty for legacy inline manifests. */
+  private def chunkRefsOf(node: com.fasterxml.jackson.databind.JsonNode): Seq[ChunkRef] =
     if (!node.has("chunks")) Seq.empty
     else node.get("chunks").elements().asScala.map(parseChunkRef).toSeq
-  }
 
-  def snapshotAt(version: Long): Snapshot = {
-    // A raw NoSuchFileException here surfaces verbatim to SQL users
-    // (`VERSION AS OF n` on an expired or publish-skipped version) — name
-    // the actual failure and the retained range instead.
-    if (!Files.exists(manifestDir.resolve(s"v$version.json")))
-      throw new IllegalArgumentException(
-        s"no snapshot v$version at $root${branchName.fold("")(b => s" (branch $b)")}: " +
-          "expired, publish-skipped, or never committed " +
-          s"(current version: ${currentVersion})")
-    val node = mapper.readTree(Files.readAllBytes(manifestDir.resolve(s"v$version.json")))
+  /** A version's manifest JSON — one read; None when it is not retained. */
+  private def manifestNode(version: Long): Option[com.fasterxml.jackson.databind.JsonNode] =
+    commitIo.readIfExists(manifestPath(version)).map(b => mapper.readTree(b))
+
+  /** [[manifestNode]] of a version that must be retained. A raw
+    * NoSuchFileException would surface verbatim to SQL users (`VERSION AS
+    * OF n` on an expired or publish-skipped version) — name the actual
+    * failure and the retained range instead. */
+  private def manifest(version: Long): com.fasterxml.jackson.databind.JsonNode =
+    manifestNode(version).getOrElse(throw new IllegalArgumentException(
+      s"no snapshot v$version at $root${branchName.fold("")(b => s" (branch $b)")}: " +
+        "expired, publish-skipped, or never committed " +
+        s"(current version: ${currentVersion})"))
+
+  def snapshotAt(version: Long): Snapshot = snapshotOf(manifest(version))
+
+  private def snapshotOf(node: com.fasterxml.jackson.databind.JsonNode): Snapshot = {
     val files: Seq[DataFile] =
       if (node.has("chunks")) {
         // Chunked manifest: the file list lives in immutable chunk files the
@@ -406,10 +404,8 @@ final class TransactionalTable private (
         // Materialization is LAZY (ManifestFiles): chunk-level stats answer
         // length/rowCount and let planners load only range-matching chunks;
         // a full traversal still loads everything in parallel.
-        val refs = node.get("chunks").elements().asScala.map(parseChunkRef).toSeq
-        new ManifestFiles(refs, loadChunk)
-      } else // legacy inline manifest
-        node.get("files").elements().asScala.map(parseDataFile).toSeq
+        new ManifestFiles(chunkRefsOf(node), loadChunk)
+      } else ChunkJson.files(node) // legacy inline manifest
     val deletes =
       if (!node.has("deletes")) Seq.empty
       else node.get("deletes").elements().asScala.map { d =>
@@ -436,9 +432,7 @@ final class TransactionalTable private (
     * (Iceberg's timestamp→snapshot resolution). Expired versions are skipped;
     * throws when the timestamp predates every retained commit. */
   def versionAt(tsMs: Long): Long = {
-    val vs = (0L to currentVersion)
-      .filter(v => Files.exists(manifestDir.resolve(s"v$v.json")))
-      .filter(v => snapshotAt(v).committedAtMs <= tsMs)
+    val vs = committedVersions.filter(v => snapshotAt(v).committedAtMs <= tsMs)
     if (vs.isEmpty) throw new IllegalArgumentException(
       s"no retained snapshot at or before timestamp $tsMs (root=$root)")
     vs.max
@@ -455,7 +449,7 @@ final class TransactionalTable private (
     * schema). Pre-upgrade manifests (no schema stamp) fall back to the live
     * schema. */
   def schemaAt(version: Long): StructType = {
-    val node = mapper.readTree(Files.readAllBytes(manifestDir.resolve(s"v$version.json")))
+    val node = manifest(version)
     if (!node.has("schemaJson")) schema
     else org.apache.spark.sql.types.DataType.fromJson(node.get("schemaJson").asText())
       .asInstanceOf[StructType]
@@ -976,10 +970,8 @@ final class TransactionalTable private (
 
   /** Current tag → version map (empty when no refs file exists). */
   def tags: Map[String, Long] =
-    if (!Files.exists(refsPath)) Map.empty
-    else {
-      val node = mapper.readTree(Files.readAllBytes(refsPath))
-      node.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+    commitIo.readIfExists(refsPath).fold(Map.empty[String, Long]) { b =>
+      mapper.readTree(b).properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
     }
 
   /** Tag a committed version (default: the current one). Overwrites an
@@ -988,8 +980,7 @@ final class TransactionalTable private (
   def createTag(name: String, version: Long = -1L): Unit = synchronized {
     require(branchName.isEmpty, "tags name MAIN versions; create them from the main handle")
     val v = if (version >= 0) version else currentVersion
-    require(Files.exists(manifestDir.resolve(s"v$v.json")),
-      s"cannot tag version $v: no such retained snapshot")
+    require(manifestExists(v), s"cannot tag version $v: no such retained snapshot")
     writeRefs(tags + (name -> v))
   }
 
@@ -1006,14 +997,17 @@ final class TransactionalTable private (
   private def validBranchName(name: String): Unit =
     require(name.matches("[A-Za-z0-9_.-]+"), s"invalid branch name '$name'")
 
-  /** Handle on an existing branch; all operations target its lineage. */
+  /** Handle on an existing branch, on this handle's [[CommitIO]]; all
+    * operations target its lineage. */
   def branch(name: String): TransactionalTable = {
     require(branchName.isEmpty, "nested branches are not supported")
     validBranchName(name)
-    require(Files.exists(branchesDir.resolve(name).resolve("_current")),
+    require(commitIo.exists(branchesDir.resolve(name).resolve("_current")),
       s"no such branch '$name' (branches: ${listBranches.mkString(", ")})")
-    new TransactionalTable(spark, root, schema, pk, partitionSpec, renames,
+    val b = new TransactionalTable(spark, root, schema, pk, partitionSpec, renames,
       pastSpecs, currentSpecId, Some(name))
+    b.commitIo = commitIo
+    b
   }
 
   /** Fork a branch at `fromVersion` (default: the current main snapshot).
@@ -1029,37 +1023,42 @@ final class TransactionalTable private (
       require(branchName.isEmpty, "create branches from the main handle")
       validBranchName(name)
       val bdir = branchesDir.resolve(name)
-      require(!Files.exists(bdir.resolve("_current")), s"branch '$name' already exists")
+      require(!commitIo.exists(bdir.resolve("_current")), s"branch '$name' already exists")
       val v = if (fromVersion >= 0) fromVersion else currentVersion
-      require(Files.exists(mainManifestDir.resolve(s"v$v.json")),
-        s"cannot branch from version $v: snapshot expired or never existed")
-      Files.createDirectories(bdir)
+      val source = commitIo.readIfExists(mainManifestDir.resolve(s"v$v.json"))
+      require(source.isDefined, s"cannot branch from version $v: snapshot expired or never existed")
       // Copy the source manifest verbatim — chunk paths are absolute, so the
       // fork references the same immutable chunk files (expiry's chunk GC is
-      // branch-aware, see expireSnapshots).
-      Files.copy(mainManifestDir.resolve(s"v$v.json"), bdir.resolve(s"v$v.json"))
+      // branch-aware, see expireSnapshots). The branch exists once its
+      // pointer lands; an identical fork manifest left by a create that
+      // crashed before that is reused.
+      val fork = bdir.resolve(s"v$v.json")
+      try commitIo.putIfAbsent(fork, source.get)
+      catch { case e: java.nio.file.FileAlreadyExistsException =>
+        if (!commitIo.readIfExists(fork).exists(java.util.Arrays.equals(_, source.get))) throw e
+      }
       commitIo.putAtomic(bdir.resolve("_current"), v.toString.getBytes)
       branch(name)
     }
 
   def listBranches: Seq[String] =
-    if (!Files.isDirectory(branchesDir)) Seq.empty
-    else {
-      val s = Files.list(branchesDir)
-      try s.iterator().asScala
-        .filter(p => Files.exists(p.resolve("_current")))
-        .map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
+    commitIo.list(branchesDir).filter(p => commitIo.exists(p.resolve("_current")))
+      .map(_.getFileName.toString).sorted
 
-  /** Delete a branch's manifests and pointer. Data files the branch alone
-    * referenced become orphans (swept by [[removeOrphanFiles]] after the
-    * grace window); files shared with main are untouched. */
+  /** Delete a branch's pointer, manifests and chunks — the pointer first,
+    * so a crash midway leaves no half-branch behind, only unreferenced
+    * objects. Data files the branch alone referenced become orphans (swept
+    * by [[removeOrphanFiles]] after the grace window); files shared with
+    * main are untouched. */
   def dropBranch(name: String): Unit = synchronized {
     require(branchName.isEmpty, "drop branches from the main handle")
     validBranchName(name)
     val bdir = branchesDir.resolve(name)
-    if (Files.exists(bdir)) graft.util.Fs.deleteRecursively(bdir)
+    def deleteUnder(dir: Path): Unit =
+      commitIo.list(dir).foreach { p => deleteUnder(p); commitIo.delete(p) }
+    commitIo.delete(bdir.resolve("_current"))
+    deleteUnder(bdir)
+    commitIo.delete(bdir)
   }
 
   /**
@@ -1086,20 +1085,9 @@ final class TransactionalTable private (
     // copies v<fork>.json; branch commits continue from fork+1). A prior
     // publish of THIS branch records the main version it produced, so
     // publish → keep committing on the branch → publish again stays legal.
-    def publishBase: Set[Long] = {
-      val s = Files.list(bdir)
-      val fork = try s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong }
-        .foldLeft(Long.MaxValue)(math.min)
-      finally s.close()
-      val published = bdir.resolve("_published")
-      val last =
-        if (Files.exists(published))
-          Some(new String(Files.readAllBytes(published)).trim.toLong)
-        else None
-      Set(fork) ++ last
-    }
+    def publishBase: Set[Long] =
+      Set(commitIo.versions(bdir).headOption.getOrElse(Long.MaxValue)) ++
+        commitIo.readLong(bdir.resolve("_published"))
     // Crash recovery for the marker write below: the `_published` marker
     // lands AFTER the publish commit, so a crash between the two leaves main
     // at the published version while the branch lacks the marker. Such a
@@ -1196,9 +1184,8 @@ final class TransactionalTable private (
     require(keepLast >= 1, "must keep at least the current snapshot")
     val current = currentVersion
     // smallest version young enough to retain; everything below expires
-    val byAge = (0L to current).find(v =>
-      Files.exists(manifestDir.resolve(s"v$v.json")) &&
-        snapshotAt(v).committedAtMs >= tsMillis).getOrElse(current)
+    val byAge = committedVersions.find(v => snapshotAt(v).committedAtMs >= tsMillis)
+      .getOrElse(current)
     expireBelow(math.min(byAge, current - keepLast + 1))
   }
 
@@ -1216,17 +1203,15 @@ final class TransactionalTable private (
       commitIo.putAtomic(Paths.get(root, "_expiry_floor"),
         cutoff.toString.getBytes)
     val tagged = tags.values.toSet
-    // Publish after branch divergence can skip main version numbers — keep
-    // only versions whose manifest actually exists.
-    val keptVersions = ((cutoff to current) ++ tagged.filter(_ < cutoff)).distinct.sorted
-      .filter(v => Files.exists(manifestDir.resolve(s"v$v.json")))
+    // Publish after branch divergence can skip main version numbers — the
+    // listing holds only versions whose manifest actually exists.
+    val present = commitIo.versions(manifestDir).filter(_ <= current)
+    val keptVersions = present.filter(v => v >= cutoff || tagged(v))
     val kept = keptVersions.map(snapshotAt)
     // Branch lineages pin their files and chunk refs: a branch forked before
     // the cutoff must survive main's expiry untouched.
     val branchKept: Seq[Snapshot] = listBranches.flatMap { b =>
-      val h = branch(b); (0L to h.currentVersion).flatMap(v =>
-        if (Files.exists(branchesDir.resolve(b).resolve(s"v$v.json")))
-          Some(h.snapshotAt(v)) else None)
+      val h = branch(b); h.committedVersions.map(h.snapshotAt)
     }
     // Reference resolution by CHUNK IDENTITY + a distributed anti-join (the
     // same shape as removeOrphanFiles): the driver holds chunk paths and the
@@ -1244,8 +1229,7 @@ final class TransactionalTable private (
       }
       s.deletes.foreach(d => keptDirect += d.path)
     }
-    val expiredVersions = (0L until cutoff).filterNot(tagged)
-      .filter(v => Files.exists(manifestDir.resolve(s"v$v.json")))
+    val expiredVersions = present.filter(v => v < cutoff && !tagged(v))
     val expChunkPaths = scala.collection.mutable.LinkedHashSet.empty[String]
     val expDirect = scala.collection.mutable.HashSet.empty[String]
     expiredVersions.foreach { v =>
@@ -1277,24 +1261,19 @@ final class TransactionalTable private (
         else Files.deleteIfExists(path)
       }
     }
-    expiredVersions.foreach(v => Files.delete(manifestDir.resolve(s"v$v.json")))
+    expiredVersions.foreach(v => commitIo.delete(manifestPath(v)))
     // Manifest-chunk GC: drop chunk files no remaining manifest references
     // (expired versions' exclusive chunks, plus crash-orphaned chunks).
     // Branch manifests reference main chunk files (O(1) forks) — theirs are
     // live too.
-    val chunksDir = manifestDir.resolve("chunks")
-    if (Files.isDirectory(chunksDir)) {
+    val chunkFiles = commitIo.list(manifestDir.resolve("chunks"))
+    if (chunkFiles.nonEmpty) {
       val branchChunks = listBranches.flatMap { b =>
-        val h = branch(b); (0L to h.currentVersion).flatMap(v =>
-          if (Files.exists(branchesDir.resolve(b).resolve(s"v$v.json")))
-            h.chunkPathsOf(v) else Seq.empty)
+        val h = branch(b); h.committedVersions.flatMap(h.chunkPathsOf)
       }
       val live = (keptVersions.flatMap(chunkPathsOf) ++ branchChunks).toSet
-      val s = Files.list(chunksDir)
-      try s.iterator().asScala
-        .filterNot(p => live.contains(p.toString))
-        .foreach { p => chunkCache.remove(p.toString); Files.deleteIfExists(p) }
-      finally s.close()
+      chunkFiles.filterNot(p => live.contains(p.toString))
+        .foreach { p => chunkCache.remove(p.toString); commitIo.delete(p) }
     }
   }
 
@@ -1324,13 +1303,10 @@ final class TransactionalTable private (
     // the ORPHAN list (normally tiny) is collected, for deletion.
     val chunkPaths = scala.collection.mutable.LinkedHashSet.empty[String]
     val directRefs = scala.collection.mutable.HashSet.empty[String]
-    def collect(dir: Path, t: TransactionalTable): Unit = {
-      val ms = Files.list(dir)
-      val versions = try ms.iterator().asScala.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
-          s.stripPrefix("v").stripSuffix(".json").toLong }.toSeq
-      finally ms.close()
-      versions.foreach { v =>
+    // Every listed manifest counts, claims ahead of the pointer included: an
+    // in-flight commit's files must survive.
+    def collect(t: TransactionalTable): Unit =
+      t.commitIo.versions(t.manifestDir).foreach { v =>
         val s = t.snapshotAt(v)
         s.files match {
           case mf: ManifestFiles => mf.chunks.foreach(c => chunkPaths += c.path)
@@ -1338,9 +1314,8 @@ final class TransactionalTable private (
         }
         s.deletes.foreach(d => directRefs += d.path)
       }
-    }
-    collect(manifestDir, this)
-    listBranches.foreach(b => collect(branchesDir.resolve(b), branch(b)))
+    collect(this)
+    listBranches.foreach(b => collect(branch(b)))
     import spark.implicits._
     val refDf = {
       val fromChunks =
@@ -1377,8 +1352,14 @@ final class TransactionalTable private (
           .map { f =>
             // the path + every ancestor dir inside the data dir: a file is
             // referenced directly (data part) or via its directory (delete
-            // files are referenced by dir)
-            val probes = Iterator.iterate(f)(_.getParent)
+            // files are referenced by dir). A Hadoop checksum sidecar
+            // `.<name>.crc` is referenced exactly when `<name>` is.
+            val name = f.getFileName.toString
+            val owner =
+              if (name.startsWith(".") && name.endsWith(".crc") && name.length > 5)
+                f.resolveSibling(name.substring(1, name.length - 4))
+              else f
+            val probes = Iterator.iterate(owner)(_.getParent)
               .takeWhile(a => a != null && a.toString.startsWith(dataDirStr) &&
                 a.toString != dataDirStr)
               .map(_.toString).toSeq
@@ -1420,9 +1401,10 @@ final class TransactionalTable private (
     * plus pending delete-file count; compaction shows removed ≈ added. */
   def history(): DataFrame = {
     import spark.implicits._
-    val snaps = (0L to currentVersion)
-      .filter(v => Files.exists(manifestDir.resolve(s"v$v.json"))) // expired are gone
-      .map(snapshotAt)
+    // expired versions are gone; one manifest read serves the snapshot and
+    // its operation stamp
+    val nodes = committedVersions.map(manifest)
+    val snaps = nodes.map(snapshotOf)
     // per-version churn by CHUNK diffing (see MetadataTables.history):
     // shared chunks contribute nothing, only chunks unique to one side of a
     // version pair load — O(churn) per pair, never O(files); totals answer
@@ -1454,7 +1436,7 @@ final class TransactionalTable private (
           (added.size.toLong, added.map(_.rows).sum,
             removed.size.toLong, removed.map(_.rows).sum)
         }
-      (s.version, s.batchId, operationOf(s.version).orNull,
+      (s.version, s.batchId, opOf(nodes(i)).orNull,
         s.files.size.toLong, s.rowCount, bytes,
         addedN, addedRows, removedN, removedRows, s.deletes.size.toLong)
     }.toDF("version", "batch_id", "operation", "n_files", "n_rows", "n_bytes",
@@ -1464,14 +1446,10 @@ final class TransactionalTable private (
   /** Snapshot-summary OPERATION of a committed version (Iceberg snapshot
     * summary parity — merge/append/compact/rollback/…); None for manifests
     * written before the stamp existed. */
-  def operationOf(version: Long): Option[String] = {
-    val p = manifestDir.resolve(s"v$version.json")
-    if (!Files.exists(p)) None
-    else {
-      val n = mapper.readTree(Files.readAllBytes(p))
-      if (n.has("op")) Some(n.get("op").asText()) else None
-    }
-  }
+  def operationOf(version: Long): Option[String] = manifestNode(version).flatMap(opOf)
+
+  private def opOf(node: com.fasterxml.jackson.databind.JsonNode): Option[String] =
+    Option(node.get("op")).map(_.asText())
 
   /**
    * MERGE a micro-batch: `upserts` are full rows (insert-or-update images),
@@ -2175,22 +2153,16 @@ final class TransactionalTable private (
     * shred specs and produce wrong data, not a crash. */
   @volatile private var metaCache:
       (Array[Byte], com.fasterxml.jackson.databind.JsonNode) = null
-  private def tableMeta: Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val p = Paths.get(root, "_table.json")
-    val bytes =
-      try Files.readAllBytes(p)
-      catch {
-        case _: java.nio.file.NoSuchFileException => return None
-        case _: java.io.FileNotFoundException => return None
+  private def tableMeta: Option[com.fasterxml.jackson.databind.JsonNode] =
+    commitIo.readIfExists(Paths.get(root, "_table.json")).map { bytes =>
+      val c = metaCache
+      if (c != null && java.util.Arrays.equals(c._1, bytes)) c._2
+      else {
+        val node = mapper.readTree(bytes)
+        metaCache = (bytes, node)
+        node
       }
-    val c = metaCache
-    if (c != null && java.util.Arrays.equals(c._1, bytes)) Some(c._2)
-    else {
-      val node = mapper.readTree(bytes)
-      metaCache = (bytes, node)
-      Some(node)
     }
-  }
 
   /** The stored SQL-facing mode name for `op` (`copy-on-write` when unset). */
   def rowLevelModeName(op: String): String = {
@@ -2228,7 +2200,7 @@ final class TransactionalTable private (
     // idempotent REPAIR — it runs whenever any live file lacks an id — so a
     // crash between the flag flip and the commit is healed by re-calling.
     updateTableMeta(_.put("rowLineage", on))
-    if (on && Files.exists(pointerPath)
+    if (on && pointerVersion.isDefined
         && snapshot.files.exists(_.firstRowId.isEmpty)) {
       retryingCommit("enableLineage") { snap =>
         var next = nextRowIdOf(snap.version)
@@ -2621,7 +2593,7 @@ final class TransactionalTable private (
         }
         ()
       }
-    if (fields.nonEmpty && Files.exists(pointerPath) && snapshot.files.nonEmpty) {
+    if (fields.nonEmpty && pointerVersion.isDefined && snapshot.files.nonEmpty) {
       // Materialize BEFORE the spec goes live: the rewrite runs under a
       // PENDING spec only this handle's write path sees, so a concurrent
       // shredded read can never plan side-columns that aren't on disk yet
@@ -2666,7 +2638,7 @@ final class TransactionalTable private (
     * merely rewrites once more). */
   def healVariantShred(): Unit = synchronized {
     if (shredHealPending.nonEmpty) {
-      if (Files.exists(pointerPath) && snapshot.files.nonEmpty)
+      if (pointerVersion.isDefined && snapshot.files.nonEmpty)
         rewriteAllFiles("shred-heal")
       clearShredHealPending()
     }
@@ -2907,8 +2879,7 @@ final class TransactionalTable private (
     // Validates pk (type + presence) and the transform's source column.
     val nt = new TransactionalTable(spark, root, newSchema, newPk, newSpec)
     val marker = Paths.get(root, ReplacePendingMarker)
-    Files.write(marker, Array.emptyByteArray,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    commitIo.putAtomic(marker, Array.emptyByteArray)
     nt.retryingCommit("replace") { snap =>
       validateUnchanged(snap, expectedVersion, "REPLACE TABLE")
       val newVersion = snap.version + 1
@@ -2923,7 +2894,7 @@ final class TransactionalTable private (
     }
     writeTableMeta(root, newSchema, newPk, newSpec,
       metaVersion = Some(nt.currentVersion), replaceSemantics = true, io = commitIo)
-    Files.deleteIfExists(marker)
+    commitIo.delete(marker)
     nt
   }
 
@@ -3083,7 +3054,7 @@ final class TransactionalTable private (
       // (part-file numbering — deterministic for a fixed input partitioning).
       // The reservation is optimistic like the rest of the commit: a lost
       // CAS race re-runs this whole write against the fresh snapshot.
-      var next = nextRowIdOf(if (Files.exists(pointerPath)) currentVersion else -1L)
+      var next = nextRowIdOf(pointerVersion.getOrElse(-1L))
       val assigned = bloomed.sortBy(_.path).map { f =>
         val g = f.copy(firstRowId = Some(next)); next += f.rows; g
       }
@@ -3101,15 +3072,9 @@ final class TransactionalTable private (
     * the NEXT commit may assign. 0 for pre-lineage manifests or version < 0
     * (empty table). Monotone non-decreasing across commits — rollback
     * inherits the rolled-back-FROM mark, so discarded ids are never reused. */
-  private def nextRowIdOf(version: Long): Long = {
-    if (version < 0) return 0L
-    val p = manifestDir.resolve(s"v$version.json")
-    if (!Files.exists(p)) 0L
-    else {
-      val n = mapper.readTree(Files.readAllBytes(p))
-      if (n.has("nextRowId")) n.get("nextRowId").asLong() else 0L
-    }
-  }
+  private def nextRowIdOf(version: Long): Long =
+    if (version < 0) 0L
+    else manifestNode(version).flatMap(n => Option(n.get("nextRowId"))).fold(0L)(_.asLong())
 
   /** Table columns (besides the PK) whose footer stats are worth carrying in
     * the manifest: integral + timestamp (both stored as parquet INT32/INT64,
@@ -3220,7 +3185,7 @@ final class TransactionalTable private (
     retryingCommit("rollback") { snap =>
       require(version < snap.version,
         s"rollback target $version is not older than current ${snap.version}")
-      require(Files.exists(manifestDir.resolve(s"v$version.json")),
+      require(manifestExists(version),
         s"cannot rollback to version $version: snapshot expired or never existed")
       val old = snapshotAt(version)
       commit(Snapshot(snap.version + 1, snap.batchId, old.files, old.deletes))
@@ -3532,13 +3497,11 @@ final class TransactionalTable private (
 
   /** Write one immutable chunk file holding `files`; returns its path. */
   private def writeChunk(files: Seq[DataFile]): String = {
-    val dir = manifestDir.resolve("chunks")
-    Files.createDirectories(dir)
-    val path = dir.resolve(s"c-${java.util.UUID.randomUUID()}.json")
+    val path = manifestDir.resolve("chunks").resolve(s"c-${java.util.UUID.randomUUID()}.json")
     val node = mapper.createObjectNode()
     val arr = node.putArray("files")
     files.foreach(f => arr.add(dataFileJson(f)))
-    Files.write(path, mapper.writeValueAsBytes(node), StandardOpenOption.CREATE_NEW)
+    commitIo.putIfAbsent(path, mapper.writeValueAsBytes(node))
     chunkCache.put(path.toString, files.toIndexedSeq)
     path.toString
   }
@@ -3598,23 +3561,22 @@ final class TransactionalTable private (
    * time-travelable like any other commit.
    */
   def rewriteManifests(): (Long, Long) = synchronized {
-    val before = chunkRefsOf(currentVersion).length.toLong
+    val before = chunkPathsOf(currentVersion).length.toLong
     retryingCommit("rewriteManifests") { snap =>
       pendingRepack = true
       try commit(Snapshot(snap.version + 1, snap.batchId,
         snap.files.toIndexedSeq, snap.deletes))
       finally pendingRepack = false
     }
-    (before, chunkRefsOf(currentVersion).length.toLong)
+    (before, chunkPathsOf(currentVersion).length.toLong)
   }
 
   private def planChunks(s: Snapshot): Seq[ChunkRef] = {
     if (pendingRepack)
       return s.files.grouped(ChunkSize).map(g => ChunkRef.of(writeChunk(g), g)).toSeq
     val parentRefs: Seq[ChunkRef] =
-      if (s.version == 0 || !Files.exists(manifestDir.resolve(s"v${s.version - 1}.json")))
-        Seq.empty
-      else chunkRefsOf(s.version - 1)
+      if (s.version == 0) Seq.empty
+      else manifestNode(s.version - 1).fold(Seq.empty[ChunkRef])(chunkRefsOf)
     val hint = pendingChunkHint
     pendingChunkHint = None // consumed — never leaks into an unrelated commit
     hint match {
@@ -3690,7 +3652,7 @@ final class TransactionalTable private (
     pendingNextRowId = None // consumed — never leaks into an unrelated commit
     val wroteShred = pendingWroteShredSpec
     pendingWroteShredSpec = None // consumed — never leaks into an unrelated commit
-    if (Files.exists(pointerPath) && currentVersion >= s.version && s.version > 0)
+    if (s.version > 0 && pointerVersion.exists(_ >= s.version))
       throw new ConcurrentCommitException(
         s"version ${s.version} already committed (root=$root)")
     // Shred-spec stability: files shaped under a spec another handle has
@@ -3704,7 +3666,6 @@ final class TransactionalTable private (
         throw new ConcurrentCommitException(
           s"variant shred spec changed concurrently while writing data files (root=$root)")
     }
-    Files.createDirectories(manifestDir)
     val chunkRefs = planChunks(s)
     val node = mapper.createObjectNode()
     node.put("version", s.version); node.put("batchId", s.batchId)
@@ -3775,11 +3736,8 @@ final class TransactionalTable private (
     val inheritedFences =
       if (s.writerFences.nonEmpty) s.writerFences
       else pendingParentFences.getOrElse {
-        if (Files.exists(pointerPath))
-          try writerFencesOf(mapper.readTree(
-            Files.readAllBytes(manifestDir.resolve(s"v$currentVersion.json"))))
-          catch { case _: Exception => Map.empty[String, Long] }
-        else Map.empty[String, Long]
+        try pointerVersion.flatMap(manifestNode).fold(Map.empty[String, Long])(writerFencesOf)
+        catch { case _: Exception => Map.empty[String, Long] }
       }
     // fences are monotone: an extra-fence update never lowers an inherited mark
     val grownExtra = pendingExtraFences.map { case (k, v) =>
@@ -3790,7 +3748,7 @@ final class TransactionalTable private (
       val fo = node.putObject("writerFences")
       effectiveFences.foreach { case (k, v) => fo.put(k, v) }
     }
-    val mPath = manifestDir.resolve(s"v${s.version}.json")
+    val mPath = manifestPath(s.version)
     val bytes = mapper.writeValueAsBytes(node)
     // claim + publish run through the CommitIO contract (r17): the claim
     // needs only a conditional PUT, the publish only a full-object replace
@@ -3799,7 +3757,7 @@ final class TransactionalTable private (
     // it on a simulated no-rename store)
     try commitIo.putIfAbsent(mPath, bytes)
     catch { case _: java.nio.file.FileAlreadyExistsException =>
-      if (commitIo.exists(pointerPath) && currentVersion >= s.version)
+      if (pointerVersion.exists(_ >= s.version))
         throw new ConcurrentCommitException(
           s"manifest v${s.version} committed by another writer (root=$root)")
       // Claim exists but the pointer hasn't reached it: in-flight writer
@@ -3862,9 +3820,8 @@ object TransactionalTable {
     // A rename marker can only be stale here (had the move happened, this
     // create would have failed on exists) — sweep it so it can never heal
     // ONTO the fresh table being created at this root.
-    Files.deleteIfExists(renameMarker(root))
+    PosixCommitIO.delete(renameMarker(root))
     val t = new TransactionalTable(spark, root, schema, pk, partition)
-    Files.createDirectories(Paths.get(root))
     // Self-describing table: persist schema/pk/partitioning so catalogs
     // (graft.sql.GraftCatalog) and tools can open the table from its path
     // alone (what Iceberg keeps in table metadata files).
@@ -3946,9 +3903,8 @@ object TransactionalTable {
       "sortOrder", "autoCompactMinFiles", "autoCompactTargetRows")
     def carries(f: String): Boolean =
       !structuralKeys(f) && (!replaceSemantics || replaceCarried(f))
-    val existingMeta = Paths.get(root, "_table.json")
-    if (Files.exists(existingMeta)) {
-      val old = mapper.readTree(Files.readAllBytes(existingMeta))
+    io.readIfExists(Paths.get(root, "_table.json")).foreach { bytes =>
+      val old = mapper.readTree(bytes)
       old.fieldNames().asScala.filter(carries).foreach { f =>
         meta.set[com.fasterxml.jackson.databind.JsonNode](f, old.get(f)); ()
       }
@@ -4004,18 +3960,15 @@ object TransactionalTable {
     * meta rewrite is an atomic move, and `metaVersion` ordering makes a
     * late heal of an already-synced meta a no-op. */
   private def healReplace(root: String): Unit = {
+    val io = PosixCommitIO
     val marker = Paths.get(root, ReplacePendingMarker)
-    if (!Files.exists(marker)) return
-    val ageMs = try System.currentTimeMillis() - Files.getLastModifiedTime(marker).toMillis
+    val ageMs = try System.currentTimeMillis() - io.modifiedAtMs(marker)
       catch { case _: java.nio.file.NoSuchFileException => return }
     if (ageMs < OrphanManifestGraceMs) return
-    val ptr = Paths.get(root, "_current")
-    if (Files.exists(ptr)) {
-      val v = new String(Files.readAllBytes(ptr)).trim.toLong
-      val mf = Paths.get(root, "manifest", s"v$v.json")
-      if (Files.exists(mf)) {
-        val node = mapper.readTree(Files.readAllBytes(mf))
-        val metaNode = mapper.readTree(Files.readAllBytes(Paths.get(root, "_table.json")))
+    io.readLong(Paths.get(root, "_current")).foreach { v =>
+      io.readIfExists(Paths.get(root, "manifest", s"v$v.json")).foreach { mf =>
+        val node = mapper.readTree(mf)
+        val metaNode = mapper.readTree(io.read(Paths.get(root, "_table.json")))
         val synced = if (metaNode.has("metaVersion")) metaNode.get("metaVersion").asLong else -1L
         if (node.has("replace") && synced < v) {
           val r = node.get("replace")
@@ -4031,7 +3984,7 @@ object TransactionalTable {
         }
       }
     }
-    Files.deleteIfExists(marker)
+    io.delete(marker)
   }
 
   /** Open a table from its path alone, using the persisted `_table.json`. */
@@ -4134,7 +4087,7 @@ object TransactionalTable {
   def open(spark: SparkSession, root: String): TransactionalTable = {
     healRename(root)
     healReplace(root)
-    val meta = mapper.readTree(Files.readAllBytes(Paths.get(root, "_table.json")))
+    val meta = mapper.readTree(PosixCommitIO.read(Paths.get(root, "_table.json")))
     val schema = org.apache.spark.sql.types.DataType.fromJson(
       meta.get("schemaJson").asText()).asInstanceOf[StructType]
     val part =
@@ -4161,7 +4114,7 @@ object TransactionalTable {
       pastSpecs, currentSpecId)
   }
 
-  def exists(root: String): Boolean = Files.exists(Paths.get(root, "_current"))
+  def exists(root: String): Boolean = PosixCommitIO.exists(Paths.get(root, "_current"))
 
   /** True if any of the sorted keys falls within [lo, hi] — binary search, O(log n). */
   private[table] def overlaps(sortedKeys: Array[Long], lo: Long, hi: Long): Boolean = {

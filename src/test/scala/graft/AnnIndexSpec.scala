@@ -481,4 +481,20 @@ class AnnIndexSpec extends SparkSpec {
     assert(hit >= (total * 0.5).toLong,
       s"recall after incremental growth too low: $hit / $total")
   }
+
+  test("centroid cache: an index dropped and re-created at the same root serves its own centroids") {
+    val root = tmpDir("ann-index-recreate") + "/idx"
+    val a = corpus(0 until 40)
+    val first = AnnIndex.create(spark, root, a, cells = 4)
+    val firstCentroids = first.centroidVectors
+    val firstVersion = first.centroids.currentVersion
+    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    // same ids (so the same seeds are picked), every vector negated: the new
+    // quantizer lands at the same root AND the same version number
+    val b = a.select(col("vec_id"), transform(col("embedding"), x => -x).as("embedding"))
+    val second = AnnIndex.create(spark, root, b, cells = 4)
+    assert(second.centroids.currentVersion === firstVersion)
+    assert(second.centroidVectors === firstCentroids.map(_.map(x => -x)),
+      "the re-created index must not serve the dropped index's centroids")
+  }
 }

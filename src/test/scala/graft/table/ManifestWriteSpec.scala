@@ -240,8 +240,12 @@ class ManifestWriteSpec extends graft.SparkSpec {
     assert(!written.exists(p => p.contains("_temporary") || p.endsWith("_SUCCESS")))
     assert(reopened.removeOrphanFiles(0L) >= written.count(_.endsWith(".parquet")))
     val after = filesUnder(dataDir)
-    assert((after intersect written).isEmpty, "removeOrphanFiles(0) reclaims every written file")
-    assert(before.filter(_.endsWith(".parquet")).subsetOf(after))
+    assert(written.exists(_.endsWith(".crc")) && before.exists(_.endsWith(".crc")),
+      s"both the committed append and the orphaned attempt wrote checksum sidecars: $before")
+    assert((after intersect written).isEmpty,
+      "removeOrphanFiles(0) reclaims every written file and its sidecar")
+    assert(before.subsetOf(after),
+      s"the committed append's files and sidecars survive: ${before -- after}")
     assert(reopened.scan().count() === 100L)
   }
 
